@@ -1,37 +1,29 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"""The contract line: runs the headline queries at $SPARK_GRAFT_SF_DIR
+(sf0.1 by default) on local[$SPARK_GRAFT_CPUS] in ONE sweep and prints
+ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec, ...}, "queries_v2": {...}, "sf": ..., "notes": ...}.
 
-Each query is forced end-to-end with the noop sink (full physical
-execution, no driver-side result transfer skewing the number).
+Protocol: one JVM warm-up query, then one sweep of HEADLINE and
+HEADLINE_V2. Each query is forced end-to-end with the noop sink (full
+physical execution, no driver-side result transfer skewing the number)
+and published as the median of REPEAT runs. The notes carry per-query
+ratios against the frozen baselines (BASELINE.md / BENCH_r01.json):
+uniform ratio inflation = host load; one query moving alone = that
+query regressed. Diagnostic detail goes to a sidecar file
+($SPARK_GRAFT_BENCH_DETAIL, default /tmp/bench_detail.json).
 
-Contention hardening (wall-clock on this host swings ~2x with co-tenant
-load): bench WAITS for an idle host before starting (and stamps
-``contaminated: true`` in the contract line if it never got one — see
-``wait_for_idle``/``contaminated``), a contaminated OR suspect sweep
-(uniform ratio inflation without the stamp — the 8-14-loadavg co-tenant
-band, r15) is RETRIED in full up to SWEEP_ATTEMPTS times keeping the
-cleanest attempt (r9/r15), a STILL-contaminated-or-suspect record
-re-times its spiked queries after one more (longer) idle wait with the
-same median-of-repeat protocol and PUBLISHES the idle number when it
-reads faster (``idle_rerun``/``adjudicate_published``, r13/r15 — the
-artifact self-adjudicates even when the host never idles during the
-sweeps; swept numbers stay in the sidecar), and per-query times are the
-MEDIAN of $SPARK_GRAFT_BENCH_REPEAT runs (default 3), the JSON carries
-os.getloadavg() markers taken before and after the run, and a per-query
-ratio table against the frozen round-1 baseline (BASELINE.md /
-BENCH_r01.json) so a single noisy run is distinguishable from a plan
-regression: uniform ratio inflation = host load; one query moving alone
-= that query regressed.
+This line is a single wall-clock reading, not a gain claim. Gains are
+claimed with the paired benchmark, which runs seeded inputs, checks
+every output against the DuckDB oracle and records per-layer traces:
+``python3 perfbench/run.py --workload all --seed N``.
 
 Two headline generations (r11, VERDICT r10 item 3): the r1 set keeps
 its frozen BASELINE_R1 contract for cross-round comparability, and
 HEADLINE_V2 covers the post-r1 heavy operators (span scrub, capped
 dedup compositions, stream-stream join, BPE training) against a
-baseline frozen in r11 — both blocks run in every sweep, both medians
-gate the contamination retry, and both participate in the post-sweep
-resample, so a regression in EITHER generation trips the machinery.
+baseline frozen in r11 — both blocks run in every sweep and each
+carries its own ratio block in the notes.
 """
 
 from __future__ import annotations
@@ -94,8 +86,7 @@ BASELINE_R1 = {
 # v2 headline set (VERDICT r10 item 3): the post-r1 HEAVY operators the
 # r1 contract can't see — a 2x regression in any of these was
 # previously invisible to the gate (they were timed once in the EXTRA
-# sidecar, no baseline, no retry/resample). Runs inside the same sweep
-# under the same contamination/retry/resample machinery; tracked as a
+# sidecar, no baseline). Runs inside the same sweep; tracked as a
 # SEPARATE ratio block (ratio_median_v2) so the r1 cross-round contract
 # stays comparable.
 HEADLINE_V2 = (
@@ -117,101 +108,19 @@ BASELINE_V2 = {
     "bpe_train": 3.859,
 }
 
-# baseline lookup across both headline generations (resample ratios)
-BASELINE_ALL = {**BASELINE_R1, **BASELINE_V2}
+# Runs per query; the published number is their median.
+REPEAT = 3
 
-
-# Self-adjudication under load (VERDICT r6 "what's wrong" #1): a
-# per-query ratio spike in a run that started under host contention is
-# usually noise (the r6 official record carried a spurious 2.27x), but
-# proving that previously required a judge to re-run the query by hand.
-# When BOTH hold — ratio above RESAMPLE_RATIO and loadavg at either end
-# of the sweep above RESAMPLE_LOADAVG — bench re-samples the query once
-# after the sweep and records both numbers in the sidecar, so the
-# official record adjudicates itself. Env-overridable for testing.
-RESAMPLE_RATIO = 1.5
-RESAMPLE_LOADAVG = 4.0
-
-# Artifact-of-record guard (VERDICT r7 item 3): BENCH_r07.json shipped
-# with loadavg-7.5 numbers that the resample sidecar then disproved —
-# the official record should never LEAD with co-tenancy noise. Before
-# the sweep, bench WAITS (up to IDLE_WAIT_MAX_SEC, polling) for the
-# 1-minute loadavg to drop under IDLE_LOADAVG; if the host never goes
-# idle, it proceeds but stamps ``"contaminated": true`` in the contract
-# line (and the same stamp lands if load was high at either end of the
-# sweep), so a round's headline number is self-describing. Thresholds
-# env-overridable (SPARK_GRAFT_BENCH_IDLE_LOADAVG / _IDLE_WAIT_SEC).
-IDLE_LOADAVG = 2.0
-IDLE_WAIT_MAX_SEC = 600
-IDLE_POLL_SEC = 20
-# The after-sweep threshold must sit ABOVE the bench's own footprint:
-# a local[32] sweep on an otherwise-idle host drives the 1-min loadavg
-# to ~4-5 all by itself (measured on the first round-8 run, which
-# self-stamped as contaminated), while genuine co-tenant bursts in the
-# r6/r7 record read 7.5-13. Recalibrated 6.0 -> 7.0 in r9 (idle-start
-# self-footprint then: 6.61/6.65). Recalibrated 7.0 -> 14.0 in r13:
-# the suite is denser again (the v2 generation swept every round,
-# faster queries = more stage churn per wall-second) — a controlled
-# idle-host measurement of ONE un-repeated headline+v2 pass peaked at
-# 8.11 all by itself (start load 0.24), and two full idle-start
-# sweeps peaked at 11.08/13.08 with ratio medians 0.90/0.91 (BETTER
-# than the idle r1 baseline, which external load cannot produce) and
-# load collapsing to ~0.25 within minutes of bench exit — those peaks
-# ARE the bench. Genuine co-tenant episodes in the record read 20-28
-# (r12). Bursts in the now-ambiguous 8-14 band are covered by the
-# ratio machinery (resample + retry-stop + idle rerun), which is the
-# robust signal regardless of the stamp.
-AFTER_LOADAVG = 14.0
-
-# Embedded idle rerun (VERDICT r12 item 2): r12 shipped three
-# contaminated sweep attempts in a row (loadavg to 28), so the artifact
-# of record carried a 3.39x outlier that only a MANUAL idle run in the
-# round notes refuted. The record must adjudicate itself: when even the
-# chosen attempt is contaminated, bench waits once more — its own,
-# longer budget — for a genuinely idle window and re-times every spiked
-# query (ratio > RESAMPLE_RATIO in either generation) with the SAME
-# median-of-repeat protocol the sweep used (r15 — single-shot before).
-# Per-query numbers land in the detail sidecar; the contract line
-# carries a compact summary (whether the window was actually idle, the
-# rerun loadavg, and the worst rerun ratio), so a reader adjudicates
-# the spikes from the artifact alone.
-IDLE_RERUN_WAIT_SEC = 900
-
-# Suspect-sweep retry (r15, measurement fix — declared in
-# OPTIMIZATION_r15.md): the r14 driver sweep sat exactly in the blind
-# band — UNSTAMPED (peak 9.77, under AFTER_LOADAVG's 14.x self-
-# footprint calibration) yet uniformly inflated (ratio_median 1.30,
-# ratio_max 3.43) — and its OWN embedded idle rerun then read every
-# spiked query back at 0.84–1.11x, while the driver's 8-core sweep
-# minutes later read ratio_median 0.87 on the same tree. The published
-# medians led with co-tenant noise and the refutation sat in the
-# sidecar. Uniform ratio inflation across both generations IS the
-# host-load signature (this file's own header rule), so a sweep whose
-# worst block median exceeds SUSPECT_RATIO_MEDIAN now retries like a
-# stamped one and selection prefers attempts that are neither stamped
-# nor suspect. External load can only inflate wall times, so retrying
-# on an inflated median can never hide a real regression — a genuine
-# across-the-board slowdown reproduces in every attempt and the
-# cleanest-attempt pick then reports it.
-SUSPECT_RATIO_MEDIAN = 1.10
-
-
-def suspect(attempt: dict) -> bool:
-    """True when an UNSTAMPED attempt's ratios carry the uniform-
-    inflation signature (worst block median above SUSPECT_RATIO_MEDIAN)
-    — the 8–14-loadavg co-tenant band the contamination stamp cannot
-    see. Stamped attempts are already handled by the retry loop."""
-    thresh = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_SUSPECT_RATIO_MEDIAN", SUSPECT_RATIO_MEDIAN))
-    return (not attempt["contaminated"]) and worst_median(attempt) > thresh
+# The contract line is read from a BOUNDED TAIL of stdout, so it must
+# stay under this many characters (a longer line loses the record).
+CONTRACT_LINE_MAX = 4000
 
 
 def time_query(spark, queries, name: str, sf_dir: str) -> float:
-    """THE single-query timing protocol, rendered once (r13 review —
-    the sweep, the resample, the idle rerun, the extra sidecar, and
-    the codec ceiling all share it): clear cached frames (ops may
-    persist internally), force full physical execution through the
-    noop sink, return seconds (unrounded; callers round)."""
+    """THE single-query timing protocol, rendered once (the sweep, the
+    extra sidecar and the codec ceiling all share it): clear cached
+    frames (ops may persist internally), force full physical execution
+    through the noop sink, return seconds (unrounded; callers round)."""
     spark.catalog.clearCache()
     t0 = time.perf_counter()
     queries[name](spark, sf_dir).write.mode("overwrite") \
@@ -219,178 +128,66 @@ def time_query(spark, queries, name: str, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
-def idle_rerun(spark, queries, sf_dir: str, chosen: dict,
-               repeat: int = 1) -> dict | None:
-    """Re-time the chosen attempt's spiked queries after an extra idle
-    wait; None when nothing spiked, or when spikes carry no load
-    evidence (the medians then speak for themselves). ``repeat`` > 1
-    applies the sweep's own median-of-repeat protocol (r15): the rerun
-    numbers can now enter the published record (see
-    ``adjudicate_published``), so they must be measured the same way.
-
-    Fires on the contaminated stamp OR on ratio+load evidence alone
-    (ADVICE r13): with AFTER_LOADAVG recalibrated to the bench's own
-    14.x footprint, a genuine co-tenant burst in the 8-14 band leaves
-    the sweep UNSTAMPED — previously only the single-shot resample
-    sidecar covered that band, and r14's first sweep shipped exactly
-    that record (peak 12.0, ratio_max 2.04, no idle rerun). The load
-    gate is the resample sidecar's own (RESAMPLE_LOADAVG over
-    before/after/peak), so a spiked ratio on a genuinely quiet host —
-    a real regression — still adjudicates through the medians instead
-    of burning an idle wait."""
-    ratio_thresh = float(os.environ.get(
-        "SPARK_GRAFT_RESAMPLE_RATIO", RESAMPLE_RATIO))
-    ratios = {**chosen["ratios"], **chosen.get("ratios_v2", {})}
-    spiked = sorted(n for n, r in ratios.items() if r > ratio_thresh)
-    if not spiked:
-        return None
-    if not chosen["contaminated"]:
-        load_thresh = float(os.environ.get(
-            "SPARK_GRAFT_RESAMPLE_LOADAVG", RESAMPLE_LOADAVG))
-        # .get defaults (ADVICE r14): replayed attempt dicts that
-        # predate the load fields degrade to stamped-only gating
-        # instead of raising
-        load_evidence = max(chosen.get("load_before", (0.0,))[0],
-                            chosen.get("load_after", (0.0,))[0],
-                            chosen.get("load_peak") or 0.0)
-        if load_evidence <= load_thresh:
-            return None
-    load = wait_for_idle(max_wait=float(os.environ.get(
-        "SPARK_GRAFT_BENCH_IDLE_RERUN_WAIT_SEC", IDLE_RERUN_WAIT_SEC)))
-    idle_thresh = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_IDLE_LOADAVG", IDLE_LOADAVG))
-    timings = {name: round(statistics.median(
-                   [time_query(spark, queries, name, sf_dir)
-                    for _ in range(max(repeat, 1))]), 3)
-               for name in spiked}
-    rerun_ratios = {n: round(timings[n] / BASELINE_ALL[n], 2)
-                    for n in spiked if n in BASELINE_ALL}
-    return {
-        # True = the rerun actually started on an idle host; False =
-        # the host never idled inside the budget, numbers still suspect
-        "idle": load[0] < idle_thresh,
-        "load_before": [round(x, 2) for x in load],
-        "load_after": round(os.getloadavg()[0], 2),
-        "timings": timings,
-        "ratios": rerun_ratios,
-    }
+def sweep(spark, queries, names: tuple[str, ...],
+          sf_dir: str) -> tuple[dict[str, float], dict[str, list[float]]]:
+    """Time each query REPEAT times; return the per-query medians and
+    the per-query [min, median, max] spread (a wide band is co-tenant
+    contention, a tight band with a moved median is real)."""
+    timings: dict[str, float] = {}
+    spread: dict[str, list[float]] = {}
+    for name in names:
+        runs = [time_query(spark, queries, name, sf_dir)
+                for _ in range(REPEAT)]
+        timings[name] = round(statistics.median(runs), 3)
+        spread[name] = [round(min(runs), 3), timings[name],
+                        round(max(runs), 3)]
+    return timings, spread
 
 
-# Full-sweep retry (VERDICT r8 item 2): three consecutive rounds shipped
-# a contaminated artifact of record whose spikes the resample sidecar
-# then disproved — the stamp fired correctly but the HEADLINE total
-# still led with noise. When a sweep comes back contaminated, bench now
-# re-runs the ENTIRE headline sweep (after another idle wait) up to
-# SWEEP_ATTEMPTS times and keeps the cleanest attempt (uncontaminated
-# first, then lowest ratio_median); every attempt's summary lands in
-# the contract notes so a never-idle host leaves an auditable trail.
-SWEEP_ATTEMPTS = 3
-
-# Early stop for the retry loop: external load can only INFLATE wall
-# times, so a stamped attempt whose ratio_median is already at/under
-# the idle round-1 baseline is self-adjudicated clean — another sweep
-# cannot beat it and just burns 10+ min of a driver round (observed
-# live: retrying past a 0.81-median attempt bought a 1.71 burst read).
-RETRY_STOP_RATIO = 1.0
+def baseline_ratios(timings: dict[str, float],
+                    baseline: dict[str, float]) -> dict[str, float]:
+    return {name: round(t / baseline[name], 2)
+            for name, t in timings.items()}
 
 
-def worst_median(attempt: dict) -> float:
-    """The retry/selection signal across BOTH headline generations: the
-    worse of ratio_median (r1 set) and ratio_median_v2 — a sweep is
-    only self-adjudicated clean when NEITHER block regressed. Falls
-    back to the r1 median for attempts without a v2 block (tests,
-    legacy records)."""
-    return max(attempt["ratio_median"],
-               attempt.get("ratio_median_v2", attempt["ratio_median"]))
+def contract_line(timings: dict[str, float], timings_v2: dict[str, float],
+                  sf: float, bench_id: int,
+                  detail_file: str | None) -> tuple[str, bool]:
+    """The contract JSON line, and whether it fits under
+    CONTRACT_LINE_MAX. On overflow a minimal record replaces it, so a
+    record still lands (the caller then exits non-zero)."""
+    total = round(sum(timings.values()), 3)
+    ratios = baseline_ratios(timings, BASELINE_R1)
+    ratios_v2 = baseline_ratios(timings_v2, BASELINE_V2)
+    line = json.dumps({
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "queries_v2": timings_v2,
+        "sf": sf,
+        "notes": {
+            "per_query_stat": f"median_of_{REPEAT}",
+            "ratio_median": round(statistics.median(ratios.values()), 2),
+            "ratio_max": round(max(ratios.values()), 2),
+            # v2 block (VERDICT r10 item 3): the post-r1 heavy
+            # operators against their frozen r11 baseline
+            "total_v2_sec": round(sum(timings_v2.values()), 3),
+            "ratio_median_v2": round(
+                statistics.median(ratios_v2.values()), 2),
+            "ratio_max_v2": round(max(ratios_v2.values()), 2),
+            "bench_id": bench_id,
+            "detail_file": detail_file,
+        },
+    })
+    if len(line) < CONTRACT_LINE_MAX:
+        return line, True
+    return json.dumps({"metric": "headline_queries_total_wall",
+                       "value": total, "unit": "sec", "sf": sf,
+                       "notes": {"error": "contract_line_overflow",
+                                 "len": len(line),
+                                 "bench_id": bench_id}}), False
 
-
-def pick_cleanest(attempts: list[dict]) -> int:
-    """Index of the attempt the contract line should report: the first
-    one that is neither stamped NOR suspect (attempt order — retries of
-    an already clean sweep don't exist), else the attempt with the
-    lowest worst-of-both-blocks ratio median (total_sec tiebreak,
-    summed across both headline sets). Suspect attempts (r15) lose to
-    later clean ones for the same reason stamped ones do: their
-    medians carry the uniform-inflation load signature."""
-    for i, a in enumerate(attempts):
-        if not a["contaminated"] and not a.get("suspect", False):
-            return i
-    return min(range(len(attempts)),
-               key=lambda i: (worst_median(attempts[i]),
-                              sum(attempts[i]["timings"].values())
-                              + sum(attempts[i].get("timings_v2", {})
-                                    .values())))
-
-
-def adjudicate_published(timings: dict, timings_v2: dict,
-                         rerun: dict | None) -> list[str]:
-    """Substitute idle-rerun medians into the published per-query
-    numbers (r15, measurement fix — declared in OPTIMIZATION_r15.md):
-    when the embedded idle rerun actually got an idle window and read a
-    spiked query FASTER than the swept median, the swept median was
-    co-tenant noise by construction (external load can only inflate),
-    so the published record leads with the idle measurement. Mutates
-    ``timings``/``timings_v2`` in place and returns the sorted names it
-    adjudicated; the swept numbers stay in the detail sidecar
-    (per_query_min_med_max, resampled_after_sweep, idle_rerun.timings)
-    and the contract notes name the substituted queries. A rerun that
-    never got an idle window, or that read the query SLOWER, changes
-    nothing — the sweep median stands."""
-    if not rerun or not rerun.get("idle"):
-        return []
-    adjudicated = []
-    for name, t in rerun["timings"].items():
-        block = timings if name in timings else (
-            timings_v2 if name in timings_v2 else None)
-        if block is not None and t < block[name]:
-            block[name] = t
-            adjudicated.append(name)
-    return sorted(adjudicated)
-
-
-def contaminated(load_before: tuple[float, ...],
-                 load_after: tuple[float, ...],
-                 thresh: float | None = None,
-                 load_peak: float | None = None) -> bool:
-    """True when the sweep ran under co-tenant load — the stamp that
-    tells a reader ratios are suspect. Asymmetric thresholds: before
-    the sweep the host must be genuinely idle (< IDLE_LOADAVG, nothing
-    is running yet), but the after reading includes the bench's OWN
-    32-thread footprint, so only readings above AFTER_LOADAVG indicate
-    external load. ``load_peak`` (r9) is the MAX 1-min loadavg sampled
-    between headline queries: endpoint readings miss a mid-sweep burst
-    that has decayed by sweep end (observed live — six adjacent-query
-    spikes, all resample-adjudicated to ~1x, with load_after back at
-    the self-footprint), so the peak is held to the same after-side
-    threshold."""
-    if thresh is None:
-        thresh = float(os.environ.get(
-            "SPARK_GRAFT_BENCH_IDLE_LOADAVG", IDLE_LOADAVG))
-    after_thresh = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_AFTER_LOADAVG", AFTER_LOADAVG))
-    # >= on the before side matches wait_for_idle's busy predicate: a
-    # host the waiter judged never-idle must also be stamped
-    return (load_before[0] >= thresh or load_after[0] > after_thresh
-            or (load_peak is not None and load_peak > after_thresh))
-
-
-def wait_for_idle(max_wait: float | None = None,
-                  poll: float = IDLE_POLL_SEC) -> tuple[float, ...]:
-    """Block until loadavg[0] < IDLE_LOADAVG or max_wait expires;
-    returns the final loadavg triple (the sweep's load_before)."""
-    thresh = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_IDLE_LOADAVG", IDLE_LOADAVG))
-    if max_wait is None:
-        max_wait = float(os.environ.get(
-            "SPARK_GRAFT_BENCH_IDLE_WAIT_SEC", IDLE_WAIT_MAX_SEC))
-    deadline = time.monotonic() + max_wait
-    load = os.getloadavg()
-    while load[0] >= thresh and time.monotonic() < deadline:
-        print(f"bench: waiting for idle host (loadavg {load[0]:.2f} >= "
-              f"{thresh}) ...", flush=True)
-        time.sleep(poll)
-        load = os.getloadavg()
-    return load
 
 # Codec swap-rule enforcement (VERDICT r6 item 7): the documented rule
 # (docs/MULTIMODAL_CODECS.md) says the pure-Python codecs are an
@@ -424,135 +221,20 @@ def media_magic_share(spark, sf_dir: str) -> float:
     return (row["media_b"] or 0) / max(row["total_b"] or 0, 1)
 
 
-def resample_candidates(ratios: dict[str, float],
-                        loadavg_before: tuple[float, ...],
-                        loadavg_after: tuple[float, ...],
-                        ratio_thresh: float | None = None,
-                        load_thresh: float | None = None,
-                        load_peak: float | None = None) -> list[str]:
-    """Queries whose baseline ratio spiked in a load-contaminated run —
-    the set main() re-samples once after the sweep. ``load_peak`` is
-    the sweep's max mid-sweep 1-min loadavg (ADVICE r9): a co-tenant
-    burst can decay before the endpoint reads, so gating only on
-    before/after shipped BENCH_r09's 2.53x/2.24x spikes unadjudicated
-    — the peak is held to the same threshold."""
-    if ratio_thresh is None:
-        ratio_thresh = float(os.environ.get(
-            "SPARK_GRAFT_RESAMPLE_RATIO", RESAMPLE_RATIO))
-    if load_thresh is None:
-        load_thresh = float(os.environ.get(
-            "SPARK_GRAFT_RESAMPLE_LOADAVG", RESAMPLE_LOADAVG))
-    if max(loadavg_before[0], loadavg_after[0],
-           load_peak or 0.0) <= load_thresh:
-        return []
-    return sorted(n for n, r in ratios.items() if r > ratio_thresh)
-
-
-def run_headline_sweep(spark, queries, sf_dir: str, repeat: int) -> dict:
-    """One full headline sweep: idle-wait, time every headline query —
-    the r1 set, then the v2 set (VERDICT r10 item 3) — each the median
-    of ``repeat`` runs, and summarize: timings, per-query
-    [min, median, max] spread, loadavg at both ends, baseline ratios
-    per generation, and the contamination verdict for THIS attempt."""
-    load_before = wait_for_idle()
-    spread: dict[str, list[float]] = {}
-    load_peak = 0.0
-
-    def timed_set(names: tuple[str, ...]) -> dict[str, float]:
-        nonlocal load_peak
-        timings: dict[str, float] = {}
-        for name in names:
-            runs = [time_query(spark, queries, name, sf_dir)
-                    for _ in range(repeat)]
-            timings[name] = round(statistics.median(runs), 3)
-            # per-query [min, median, max] so a reader can separate
-            # noise from regression WITHIN one bench run: a wide
-            # min..max band is co-tenant contention, a tight band with
-            # a moved median is real
-            spread[name] = [round(min(runs), 3), timings[name],
-                            round(max(runs), 3)]
-            # mid-sweep burst detection (r9): a co-tenant burst can
-            # decay before sweep end, leaving clean endpoints around
-            # dirty medians
-            load_peak = max(load_peak, os.getloadavg()[0])
-        return timings
-
-    timings = timed_set(HEADLINE)
-    timings_v2 = timed_set(HEADLINE_V2)
-    load_after = os.getloadavg()
-    ratios = {name: round(timings[name] / BASELINE_R1[name], 2)
-              for name in HEADLINE if name in BASELINE_R1}
-    ratios_v2 = {name: round(timings_v2[name] / BASELINE_V2[name], 2)
-                 for name in HEADLINE_V2 if name in BASELINE_V2}
-    attempt = {
-        "timings": timings,
-        "timings_v2": timings_v2,
-        "spread": spread,
-        "load_before": load_before,
-        "load_after": load_after,
-        "load_peak": round(load_peak, 2),
-        "ratios": ratios,
-        "ratios_v2": ratios_v2,
-        "ratio_median": round(statistics.median(ratios.values()), 2),
-        "ratio_median_v2": round(statistics.median(ratios_v2.values()), 2),
-        "contaminated": contaminated(load_before, load_after,
-                                     load_peak=load_peak),
-    }
-    attempt["suspect"] = suspect(attempt)
-    return attempt
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     queries, _ = registry()
 
-    # idle-gate BEFORE Spark spin-up (r9 review): the JVM start + warm-up
-    # query put ~30s of 32-thread load on the box; starting them on a
-    # busy host would let bench's own footprint leak into attempt 1's
-    # load_before and self-trigger the contamination retry loop
-    wait_for_idle()
     spark = get_spark("bench")
     # JVM/codegen warm-up so the first measured query isn't paying JIT
     # cost (a NON-headline query, so no measured entry gets extra warming)
     queries["q4_order_priority"](spark, sf_dir).write.mode(
         "overwrite").format("noop").save()
 
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3"))
-    max_attempts = int(os.environ.get(
-        "SPARK_GRAFT_BENCH_SWEEP_ATTEMPTS", str(SWEEP_ATTEMPTS)))
-    attempts: list[dict] = []
-    for i in range(max(max_attempts, 1)):
-        a = run_headline_sweep(spark, queries, sf_dir, repeat)
-        attempts.append(a)
-        if not a["contaminated"] and not a["suspect"]:
-            break
-        if worst_median(a) <= RETRY_STOP_RATIO:
-            print(f"bench: sweep attempt {i + 1} stamped (peak "
-                  f"{a['load_peak']:.2f}) but worst ratio median "
-                  f"{worst_median(a)} <= {RETRY_STOP_RATIO} — "
-                  f"self-adjudicated clean, not retrying", flush=True)
-            break
-        print(f"bench: sweep attempt {i + 1} "
-              + ("contaminated" if a["contaminated"] else
-                 "suspect (uniform ratio inflation)")
-              + f" (load {a['load_before'][0]:.2f} -> "
-              f"{a['load_after'][0]:.2f}, peak {a['load_peak']:.2f}, "
-              f"ratio_median {a['ratio_median']} / v2 "
-              f"{a['ratio_median_v2']}); "
-              + ("retrying full sweep" if i + 1 < max(max_attempts, 1)
-                 else "out of attempts — keeping cleanest"), flush=True)
-    used = pick_cleanest(attempts)
-    chosen = attempts[used]
-    # COPIES: the adjudication below may substitute idle-rerun medians
-    # into the published numbers, while the detail sidecar must keep
-    # every attempt's swept numbers verbatim
-    timings = dict(chosen["timings"])
-    timings_v2 = dict(chosen["timings_v2"])
-    spread = chosen["spread"]
-    load_before = chosen["load_before"]
-    load_after = chosen["load_after"]
+    timings, spread = sweep(spark, queries, HEADLINE, sf_dir)
+    timings_v2, spread_v2 = sweep(spark, queries, HEADLINE_V2, sf_dir)
 
     # operators added after round 1 (non-headline): timed once each
     # OUTSIDE the headline total so the cross-round contract (value vs
@@ -645,63 +327,24 @@ def main() -> None:
             .format("noop").save()
         cc_probe[f"{factor}x"] = round(time.perf_counter() - t0, 3)
 
-    ratios = chosen["ratios"]
-    ratios_v2 = chosen["ratios_v2"]
-
-    # post-sweep resample of load-contaminated spikes (see
-    # resample_candidates) — BOTH headline generations participate:
-    # the contract keeps the PRIMARY number; the sidecar carries both
-    # so the record is self-adjudicating
-    merged_timings = {**timings, **timings_v2}
-    resampled: dict[str, dict[str, float]] = {}
-    for name in resample_candidates({**ratios, **ratios_v2},
-                                    load_before, load_after,
-                                    load_peak=chosen["load_peak"]):
-        t = round(time_query(spark, queries, name, sf_dir), 3)
-        resampled[name] = {
-            "primary_sec": merged_timings[name], "resample_sec": t,
-            "ratio_primary": {**ratios, **ratios_v2}[name],
-            "ratio_resample": round(t / BASELINE_ALL[name], 2),
-        }
-    # embedded idle rerun (VERDICT r12 item 2): when the artifact of
-    # record is contaminated despite the retries, wait for a real idle
-    # window and re-time the spikes — with the sweep's own median-of-
-    # repeat protocol — so the record self-adjudicates
-    rerun = idle_rerun(spark, queries, sf_dir, chosen, repeat=repeat)
-    # r15 measurement fix (declared in OPTIMIZATION_r15.md): spiked
-    # queries whose idle rerun read FASTER are published at the idle
-    # measurement — the swept medians stay in the sidecar + notes
-    adjudicated = adjudicate_published(timings, timings_v2, rerun)
-    if adjudicated:
-        ratios = {name: round(timings[name] / BASELINE_R1[name], 2)
-                  for name in HEADLINE if name in BASELINE_R1}
-        ratios_v2 = {name: round(timings_v2[name] / BASELINE_V2[name], 2)
-                     for name in HEADLINE_V2 if name in BASELINE_V2}
-    total = round(sum(timings.values()), 3)
-    total_v2 = round(sum(timings_v2.values()), 3)
-    # Round-4 lesson (VERDICT r4 "What's wrong" #2): the driver captures
-    # a BOUNDED TAIL of stdout, so the machine-readable contract line
-    # must be the LAST line and must stay COMPACT. Diagnostic detail
-    # (per-query spreads, extra-query timings) goes to a sidecar file
-    # and a PRECEDING stdout line, never into the contract line.
-    # bench_id ties the contract line to its detail records, so a stale
-    # sidecar from a previous run can never be mistaken for this run's
+    # The contract line must be the LAST stdout line and stay COMPACT
+    # (see CONTRACT_LINE_MAX). Diagnostic detail (per-query spreads,
+    # extra-query timings) goes to a sidecar file and a PRECEDING stdout
+    # line, never into the contract line. bench_id ties the contract
+    # line to its detail records, so a stale sidecar from a previous run
+    # can never be mistaken for this run's
     bench_id = int(time.time())
     detail = {
         "bench_id": bench_id,
-        "per_query_stat": f"median_of_{repeat}",
-        "per_query_min_med_max": spread,
-        "sweep_attempt_timings": [a["timings"] for a in attempts],
-        "sweep_attempt_timings_v2": [a["timings_v2"] for a in attempts],
+        "per_query_stat": f"median_of_{REPEAT}",
+        "per_query_min_med_max": {**spread, **spread_v2},
         "extra_query_wall_single_run": extra,
-        "ratio_vs_baseline_r1": ratios,
-        "ratio_vs_baseline_v2": ratios_v2,
+        "ratio_vs_baseline_r1": baseline_ratios(timings, BASELINE_R1),
+        "ratio_vs_baseline_v2": baseline_ratios(timings_v2, BASELINE_V2),
         "codec_payload_mb_per_sec": codec_mb_s,
         "codec_corpus_mb": round(corpus_mb, 2),
         "cc_chain_probe_wall_sec": cc_probe,
         "cc_chain_probe_nodes_1x": CC_NODES_1X,
-        "resampled_after_sweep": resampled,
-        **({"idle_rerun": rerun} if rerun else {}),
         "media_magic_share": round(media_magic_share(spark, sf_dir), 6),
     }
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL",
@@ -712,72 +355,12 @@ def main() -> None:
     except OSError:
         detail_path = None          # advertise the failure, not a path
     print("bench_detail: " + json.dumps(detail))
-    contract_line = json.dumps({
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "queries_v2": timings_v2,
-        "sf": sf,
-        "notes": {
-            "per_query_stat": f"median_of_{repeat}",
-            "loadavg_before": [round(x, 2) for x in load_before],
-            "loadavg_after": [round(x, 2) for x in load_after],
-            "ratio_median": round(statistics.median(ratios.values()), 2),
-            "ratio_max": round(max(ratios.values()), 2),
-            # v2 block (VERDICT r10 item 3): the post-r1 heavy
-            # operators against their frozen r11 baseline
-            "total_v2_sec": total_v2,
-            "ratio_median_v2": round(
-                statistics.median(ratios_v2.values()), 2),
-            "ratio_max_v2": round(max(ratios_v2.values()), 2),
-            **({"resampled": sorted(resampled)} if resampled else {}),
-            # queries published at their idle-rerun median (swept
-            # medians in the sidecar: per_query_min_med_max /
-            # idle_rerun.timings carry both sides)
-            **({"adjudicated": adjudicated} if adjudicated else {}),
-            **({"contaminated": True} if chosen["contaminated"] else {}),
-            **({"suspect_sweep": True} if chosen.get("suspect") else {}),
-            # compact idle-rerun summary (full numbers in the sidecar):
-            # the contaminated record's spikes, re-timed on a waited-for
-            # idle window — self-adjudication without out-of-band runs
-            **({"idle_rerun": {
-                   "idle": rerun["idle"],
-                   "load": rerun["load_before"][0],
-                   "n": len(rerun["timings"]),
-                   "ratio_max": max(rerun["ratios"].values(), default=0.0),
-               }} if rerun else {}),
-            # full-sweep retry trail (r9): one summary per attempt, the
-            # reported attempt flagged — a never-idle host is auditable
-            "loadavg_peak": chosen["load_peak"],
-            **({"sweep_attempts": [
-                   {"load": [round(a["load_before"][0], 2),
-                             round(a["load_after"][0], 2),
-                             a["load_peak"]],
-                    "ratio_median": a["ratio_median"],
-                    "ratio_median_v2": a["ratio_median_v2"],
-                    "contaminated": a["contaminated"],
-                    **({"suspect": True} if a.get("suspect") else {}),
-                    **({"used": True} if i == used else {})}
-                   for i, a in enumerate(attempts)]}
-               if len(attempts) > 1 else {}),
-            "bench_id": bench_id,
-            "detail_file": detail_path,
-        },
-    })
-    # hard guard: the contract line must stay inside the driver's
-    # bounded stdout-tail capture (r4 lost its official record to a
-    # line that outgrew it). NOT an assert (stripped under -O), and on
-    # overflow a minimal record still lands instead of none (ADVICE r5).
-    if len(contract_line) >= 4000:
-        print(json.dumps({"metric": "headline_queries_total_wall",
-                          "value": total, "unit": "sec", "sf": sf,
-                          "notes": {"error": "contract_line_overflow",
-                                    "len": len(contract_line),
-                                    "bench_id": bench_id}}))
+    line, fits = contract_line(timings, timings_v2, sf, bench_id,
+                               detail_path)
+    print(line)
+    if not fits:                    # the overflow record landed instead
         spark.stop()
         raise SystemExit(1)
-    print(contract_line)
     # swap-rule guard AFTER the contract line so the perf record still
     # lands; nonzero exit makes the violation impossible to miss
     share = detail["media_magic_share"]

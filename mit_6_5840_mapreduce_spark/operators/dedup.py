@@ -1367,21 +1367,23 @@ def scrub_positions(spark: SparkSession, sf_dir: str, cuts: DataFrame,
     array_except returns [] for the same case. Positions in ``cuts``
     outside [1, n] never matched the anti-join and never appear in
     sequence(1, n); duplicate cut positions collapse in array_except
-    exactly as they did in the anti-join."""
+    exactly as they did in the anti-join. Both position arrays are
+    bigint, so a cut position past the int range is ignored like any
+    other out-of-range one instead of overflowing a cast (ANSI mode)."""
     base = _token_arrays(spark, sf_dir)
     if only is not None:
         base = base.where(only)
     cut_arrs = (cuts.groupBy("doc_id")
-                .agg(F.collect_list(F.col("pos").cast("int"))
+                .agg(F.collect_list(F.col("pos").cast("bigint"))
                      .alias("cut_arr")))
-    n = F.size("toks")
+    n = F.size("toks").cast("bigint")
     kept_pos = F.array_except(
-        F.when(n > 0, F.sequence(F.lit(1), n))
-        .otherwise(F.array().cast("array<int>")),
-        F.coalesce("cut_arr", F.array().cast("array<int>")))
+        F.when(n > 0, F.sequence(F.lit(1).cast("bigint"), n))
+        .otherwise(F.array().cast("array<bigint>")),
+        F.coalesce("cut_arr", F.array().cast("array<bigint>")))
     staged = (
         base.join(cut_arrs, "doc_id", "left")
-        .select("doc_id", "toks", n.cast("bigint").alias("n_tokens"),
+        .select("doc_id", "toks", n.alias("n_tokens"),
                 kept_pos.alias("kept_pos"))
     )
     n_kept = F.size("kept_pos").cast("bigint")
@@ -1392,7 +1394,7 @@ def scrub_positions(spark: SparkSession, sf_dir: str, cuts: DataFrame,
                floor4(n_cut / F.col("n_tokens")))
         .otherwise(F.lit(0.0)).alias("cut_frac"),
         F.concat_ws(" ", F.transform(
-            "kept_pos", lambda p: F.element_at("toks", p)))
+            "kept_pos", lambda p: F.element_at("toks", p.cast("int"))))
         .alias("scrubbed_text"))
 
 

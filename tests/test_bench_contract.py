@@ -5,6 +5,8 @@ as a driver-round bench crash."""
 
 from __future__ import annotations
 
+import json
+
 import bench
 
 
@@ -15,7 +17,7 @@ def test_baseline_covers_exactly_the_headline_set():
 def test_baseline_v2_covers_exactly_the_v2_set():
     assert set(bench.BASELINE_V2) == set(bench.HEADLINE_V2)
     # the two generations must not overlap: a query with two baselines
-    # would double-count in resample ratio lookups (BASELINE_ALL)
+    # would be timed twice and counted in both ratio blocks
     assert not set(bench.HEADLINE) & set(bench.HEADLINE_V2)
 
 
@@ -27,96 +29,6 @@ def test_headline_queries_are_registered_with_oracles():
     assert not missing, f"headline queries not registered: {missing}"
     no_oracle = [n for n in both if n not in oracles]
     assert not no_oracle, f"headline queries without oracles: {no_oracle}"
-
-
-def test_worst_median_spans_both_generations():
-    """The retry/selection signal must see a v2-only regression (the
-    r10 gap: a 2x move in a post-r1 heavy operator was invisible)."""
-    assert bench.worst_median(
-        {"ratio_median": 0.9, "ratio_median_v2": 2.1}) == 2.1
-    assert bench.worst_median(
-        {"ratio_median": 1.4, "ratio_median_v2": 0.8}) == 1.4
-    # legacy attempts without a v2 block fall back to the r1 median
-    assert bench.worst_median({"ratio_median": 1.2}) == 1.2
-
-
-def test_pick_cleanest_sees_v2_regression():
-    """All-dirty selection must prefer the attempt whose WORST block is
-    best — an attempt with a clean r1 median but a regressed v2 median
-    must lose to one that is mediocre in both."""
-    a = {"contaminated": True, "ratio_median": 0.8,
-         "ratio_median_v2": 2.4, "timings": {"q": 30.0}, "timings_v2": {}}
-    b = {"contaminated": True, "ratio_median": 1.2,
-         "ratio_median_v2": 1.1, "timings": {"q": 31.0}, "timings_v2": {}}
-    assert bench.pick_cleanest([a, b]) == 1
-
-
-def test_resample_triggers_only_on_spike_under_load():
-    """The post-sweep resample (r7) fires only when BOTH hold: a query's
-    baseline ratio spiked AND the host was loaded at either end of the
-    sweep — the load-contamination signature the r6 record needed a
-    manual re-run to adjudicate."""
-    ratios = {"a": 1.0, "b": 2.3, "c": 1.51}
-    # loaded at start -> both spikes resample, sorted
-    assert bench.resample_candidates(
-        ratios, (6.2, 0, 0), (1.0, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0) == ["b", "c"]
-    # loaded only at the END of the sweep counts too
-    assert bench.resample_candidates(
-        ratios, (1.0, 0, 0), (9.9, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0) == ["b", "c"]
-    # idle host: even a big spike is a real regression, not noise —
-    # no resample, the ratio stands
-    assert bench.resample_candidates(
-        ratios, (1.0, 0, 0), (2.0, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0) == []
-    # loaded but no spikes: nothing to adjudicate
-    assert bench.resample_candidates(
-        {"a": 1.2}, (8.0, 0, 0), (8.0, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0) == []
-
-
-def test_resample_triggers_on_decayed_midsweep_burst():
-    """ADVICE r9 / VERDICT r9 item 3: a co-tenant burst that decays
-    before sweep end leaves CLEAN endpoints around dirty medians —
-    BENCH_r09 shipped a 2.53x spike exactly this way. The per-query
-    loadavg PEAK the sweep records must gate the resample too."""
-    ratios = {"a": 1.0, "ivf": 2.5}
-    # endpoints idle, peak above threshold -> the spike resamples
-    assert bench.resample_candidates(
-        ratios, (1.9, 0, 0), (3.5, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0, load_peak=6.2) == ["ivf"]
-    # endpoints idle AND peak idle: real regression, no resample
-    assert bench.resample_candidates(
-        ratios, (1.9, 0, 0), (3.5, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0, load_peak=3.9) == []
-    # peak omitted (legacy callers): endpoint-only behavior unchanged
-    assert bench.resample_candidates(
-        ratios, (1.9, 0, 0), (3.5, 0, 0),
-        ratio_thresh=1.5, load_thresh=4.0) == []
-
-
-def test_main_passes_peak_into_resample():
-    """The wiring itself: main() must hand the chosen attempt's
-    load_peak to resample_candidates (the r9 gap was a recorded-but-
-    unused peak)."""
-    import ast
-    import inspect
-    tree = ast.parse(inspect.getsource(bench.main))
-    calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)
-             and getattr(n.func, "id", "") == "resample_candidates"]
-    assert calls, "main() no longer calls resample_candidates"
-    assert any(kw.arg == "load_peak" for c in calls for kw in c.keywords)
-
-
-def test_resample_thresholds_read_env(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_RESAMPLE_RATIO", "0.5")
-    monkeypatch.setenv("SPARK_GRAFT_RESAMPLE_LOADAVG", "0.1")
-    assert bench.resample_candidates(
-        {"a": 0.6}, (0.2, 0, 0), (0.0, 0, 0)) == ["a"]
-    monkeypatch.setenv("SPARK_GRAFT_RESAMPLE_LOADAVG", "99")
-    assert bench.resample_candidates(
-        {"a": 0.6}, (0.2, 0, 0), (0.0, 0, 0)) == []
 
 
 def test_media_magic_share_counts_only_container_bytes(spark,
@@ -174,238 +86,42 @@ def test_bench_extra_set_is_registered_with_oracles_or_rows_only():
     assert not dup, f"EXTRA still times headline queries: {sorted(dup)}"
 
 
-def test_contaminated_stamp_thresholds(monkeypatch):
-    """The round-8 artifact-of-record guard (VERDICT r7 item 3):
-    asymmetric thresholds — the host must be idle BEFORE the sweep,
-    while the after reading tolerates the bench's OWN local[32]
-    footprint and only flags genuine co-tenant episodes (20-28 in the
-    r12 record). r13 recalibration: a controlled idle-host pass of the
-    headline+v2 sets peaked at 8.11 all by itself and two full
-    idle-start sweeps peaked at 11.08/13.08 with sub-baseline ratio
-    medians (impossible under external load) — so readings up to ~13
-    are the bench; the 8-14 band is adjudicated by the ratio
-    machinery, not the stamp."""
-    idle, self_load = (0.4, 0.2, 0.1), (4.8, 3.0, 1.5)
-    burst = (20.0,) * 3
-    assert not bench.contaminated(idle, idle)
-    assert not bench.contaminated(idle, self_load)   # bench's own load
-    # r13 recalibration: measured self-footprint peaks (8.11 single
-    # pass; 11.08/13.08 full sweeps, both with ratio_median ~0.9)
-    # must not self-stamp
-    assert not bench.contaminated(idle, (6.65, 6.3, 6.17))
-    assert not bench.contaminated(idle, (11.4, 6.6, 5.5))
-    assert not bench.contaminated(idle, self_load, load_peak=13.1)
-    # a genuine co-tenant episode (the r12 record read 20-28) stamps,
-    # whether it survives to the endpoint or only the mid-sweep peak
-    assert bench.contaminated(idle, self_load, load_peak=20.4)
-    assert bench.contaminated(self_load, idle)       # not idle at start
-    assert bench.contaminated(idle, burst)           # external burst
-    # boundary parity with wait_for_idle's busy predicate (>=): a host
-    # sitting exactly at the idle threshold never satisfied the waiter,
-    # so the sweep must carry the stamp
-    at_thresh = (bench.IDLE_LOADAVG, 0.0, 0.0)
-    assert bench.contaminated(at_thresh, idle)
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_IDLE_LOADAVG", "25")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_AFTER_LOADAVG", "25")
-    assert not bench.contaminated(burst, burst)
+def test_contract_line_from_a_sweep_carries_the_contract_keys(monkeypatch):
+    """The contract line built from one sweep's timings: each query
+    published as the median of its REPEAT runs, every contract key
+    present, and an oversized line replaced by the minimal overflow
+    record (the line is read from a bounded stdout tail)."""
+    baseline = {**bench.BASELINE_R1, **bench.BASELINE_V2}
+    runs = iter(f * baseline[n]
+                for n in bench.HEADLINE + bench.HEADLINE_V2
+                for f in (1.0, 3.0, 2.0))
+    monkeypatch.setattr(bench, "time_query", lambda *a: next(runs))
+    assert bench.REPEAT == 3
+    timings, spread = bench.sweep(None, None, bench.HEADLINE, "")
+    timings_v2, _ = bench.sweep(None, None, bench.HEADLINE_V2, "")
+    assert spread["mr_wc"] == [0.815, 1.63, 2.445]
 
+    line, fits = bench.contract_line(timings, timings_v2, 0.1, 7,
+                                     "/tmp/bench_detail.json")
+    assert fits and len(line) < bench.CONTRACT_LINE_MAX
+    rec = json.loads(line)
+    assert rec["metric"] == "headline_queries_total_wall"
+    assert rec["unit"] == "sec" and rec["sf"] == 0.1
+    assert rec["queries"] == timings and len(rec["queries"]) == 24
+    assert rec["queries_v2"] == timings_v2 and len(rec["queries_v2"]) == 5
+    assert rec["value"] == round(sum(timings.values()), 3)
+    notes = rec["notes"]
+    assert notes["per_query_stat"] == "median_of_3"
+    assert notes["ratio_median"] == notes["ratio_max"] == 2.0
+    assert notes["ratio_median_v2"] == notes["ratio_max_v2"] == 2.0
+    assert notes["total_v2_sec"] == round(sum(timings_v2.values()), 3)
+    assert notes["bench_id"] == 7
+    assert notes["detail_file"] == "/tmp/bench_detail.json"
 
-def test_wait_for_idle_returns_immediately_on_idle_host(monkeypatch):
-    """wait_for_idle must not sleep when the host is already under the
-    threshold, and must give up (returning the loaded triple) once
-    max_wait expires instead of blocking a driver round forever."""
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.1, 0.1, 0.1))
-    assert bench.wait_for_idle()[0] == 0.1
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (9.9, 9.9, 9.9))
-    slept = []
-    monkeypatch.setattr(bench.time, "sleep", lambda s: slept.append(s))
-    clock = iter(range(0, 10_000, 100))
-    monkeypatch.setattr(bench.time, "monotonic", lambda: float(next(clock)))
-    out = bench.wait_for_idle(max_wait=300, poll=1)
-    assert out[0] == 9.9
-    assert slept, "loaded host should have waited at least one poll"
-
-
-def test_pick_cleanest_prefers_first_uncontaminated():
-    """The r9 full-sweep retry: the contract line reports the FIRST
-    clean attempt (retries only happen while contaminated, so a later
-    clean attempt cannot exist alongside an earlier one), and when
-    every attempt ran dirty, the lowest ratio_median wins with
-    total-seconds as tiebreak."""
-    def att(contam, ratio_median, total):
-        return {"contaminated": contam, "ratio_median": ratio_median,
-                "timings": {"q": total}}
-    # clean first attempt: no retry happened, index 0
-    assert bench.pick_cleanest([att(False, 1.3, 30.0)]) == 0
-    # dirty then clean: the clean one
-    assert bench.pick_cleanest(
-        [att(True, 1.1, 28.0), att(False, 1.4, 31.0)]) == 1
-    # all dirty: lowest ratio_median
-    assert bench.pick_cleanest(
-        [att(True, 1.5, 40.0), att(True, 1.2, 35.0),
-         att(True, 1.3, 33.0)]) == 1
-    # ratio tie: lower total wins
-    assert bench.pick_cleanest(
-        [att(True, 1.2, 40.0), att(True, 1.2, 35.0)]) == 1
-
-
-def test_suspect_flags_unstamped_uniform_inflation(monkeypatch):
-    """The r15 blind-band fix: BENCH_r14 shipped UNSTAMPED (peak 9.77 <
-    AFTER_LOADAVG) with ratio_median 1.30 — every published median
-    carried co-tenant noise its own idle rerun then refuted. An
-    unstamped attempt whose worst block median exceeds
-    SUSPECT_RATIO_MEDIAN must be flagged suspect; a stamped one is
-    already handled by the contamination retry, and a genuinely clean
-    one must never be."""
-    assert bench.suspect({"contaminated": False, "ratio_median": 1.30,
-                          "ratio_median_v2": 0.99})
-    # v2-only inflation counts (worst-of-both-blocks)
-    assert bench.suspect({"contaminated": False, "ratio_median": 0.95,
-                          "ratio_median_v2": 1.25})
-    # clean attempt: not suspect
-    assert not bench.suspect({"contaminated": False, "ratio_median": 0.95,
-                              "ratio_median_v2": 1.05})
-    # stamped attempt: the stamp owns it, suspect stays False
-    assert not bench.suspect({"contaminated": True, "ratio_median": 2.0,
-                              "ratio_median_v2": 2.0})
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_SUSPECT_RATIO_MEDIAN", "1.4")
-    assert not bench.suspect({"contaminated": False, "ratio_median": 1.30,
-                              "ratio_median_v2": 0.99})
-
-
-def test_pick_cleanest_skips_suspect_for_later_clean_attempt():
-    """A suspect attempt must lose to a later clean one (the retry loop
-    only retries past stamped/suspect attempts), and an all-suspect
-    trail falls back to the lowest worst-median."""
-    def att(contam, susp, ratio_median, total):
-        return {"contaminated": contam, "suspect": susp,
-                "ratio_median": ratio_median, "timings": {"q": total}}
-    assert bench.pick_cleanest(
-        [att(False, True, 1.3, 30.0), att(False, False, 0.95, 24.0)]) == 1
-    assert bench.pick_cleanest(
-        [att(False, True, 1.3, 30.0), att(False, True, 1.2, 28.0)]) == 1
-    # legacy attempt dicts without the suspect key behave as before
-    assert bench.pick_cleanest(
-        [{"contaminated": False, "ratio_median": 1.3,
-          "timings": {"q": 30.0}}]) == 0
-
-
-def test_adjudicate_published_substitutes_idle_wins_only():
-    """r15 measurement fix: the published per-query number is replaced
-    by the idle-rerun median ONLY when the rerun window was genuinely
-    idle AND read faster (external load can only inflate, so a faster
-    idle read proves the swept median was noise). Slower reruns,
-    non-idle windows, and absent reruns change nothing."""
-    timings = {"mr_wc": 2.0, "lang_id": 0.5}
-    v2 = {"bpe_train": 9.0}
-    rerun = {"idle": True,
-             "timings": {"mr_wc": 0.7, "lang_id": 0.9, "bpe_train": 3.1}}
-    out = bench.adjudicate_published(timings, v2, rerun)
-    assert out == ["bpe_train", "mr_wc"]
-    assert timings == {"mr_wc": 0.7, "lang_id": 0.5}   # slower rerun kept out
-    assert v2 == {"bpe_train": 3.1}
-    # non-idle rerun window: numbers still suspect, nothing substituted
-    t2 = {"mr_wc": 2.0}
-    assert bench.adjudicate_published(
-        t2, {}, {"idle": False, "timings": {"mr_wc": 0.7}}) == []
-    assert t2 == {"mr_wc": 2.0}
-    # no rerun at all
-    assert bench.adjudicate_published(t2, {}, None) == []
-
-
-def test_idle_rerun_uses_median_of_repeat(spark, sf_dir, monkeypatch):
-    """Published-capable rerun numbers must follow the sweep's own
-    median-of-repeat protocol (r15): repeat=3 times the query 3x."""
-    monkeypatch.setattr(bench, "wait_for_idle",
-                        lambda max_wait=None, poll=None: (0.5, 0.5, 0.5))
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.6, 0.5, 0.5))
-    calls = []
-    monkeypatch.setattr(
-        bench, "time_query",
-        lambda s, q, name, d: (calls.append(name), 0.1)[1])
-    chosen = {"contaminated": True, "ratios": {"mr_wc": 3.4},
-              "ratios_v2": {}}
-    out = bench.idle_rerun(spark, {"mr_wc": None}, sf_dir, chosen,
-                           repeat=3)
-    assert calls == ["mr_wc"] * 3
-    assert out["timings"] == {"mr_wc": 0.1}
-
-
-def test_idle_rerun_tolerates_legacy_records_without_load_fields():
-    """ADVICE r14: an unstamped attempt dict missing load_before/
-    load_after (a replayed legacy record) must degrade to stamped-only
-    gating, not raise KeyError."""
-    legacy = {"contaminated": False, "ratios": {"mr_wc": 3.0},
-              "ratios_v2": {}}
-    assert bench.idle_rerun(None, {}, "", legacy) is None
-
-
-def test_idle_rerun_skips_clean_or_spikeless_attempts(monkeypatch):
-    """The embedded idle rerun (VERDICT r12 item 2, widened per ADVICE
-    r13) runs when the chosen attempt carries spikes AND either the
-    contaminated stamp or load evidence at the resample gate — a
-    spikeless record (stamped or not), or a spiked one on a genuinely
-    quiet host (a real regression), adjudicates itself through the
-    medians."""
-    quiet_spiked = {"contaminated": False, "ratios": {"mr_wc": 3.0},
-                    "ratios_v2": {}, "load_before": (0.5, 0.5, 0.5),
-                    "load_after": (0.6, 0.5, 0.5), "load_peak": 1.0}
-    assert bench.idle_rerun(None, {}, "", quiet_spiked) is None
-    dirty_no_spike = {"contaminated": True,
-                      "ratios": {"mr_wc": 1.1},
-                      "ratios_v2": {"bpe_train": 1.2}}
-    assert bench.idle_rerun(None, {}, "", dirty_no_spike) is None
-
-
-def test_idle_rerun_fires_on_unstamped_spikes_with_load(spark, sf_dir,
-                                                        monkeypatch):
-    """ADVICE r13's blind spot: AFTER_LOADAVG now sits at the bench's
-    own footprint, so a co-tenant burst in the 8-14 band leaves the
-    sweep UNSTAMPED while still inflating ratios — the idle rerun must
-    fire on that (ratio spike + mid-sweep load evidence), not only on
-    the contaminated stamp."""
-    monkeypatch.setattr(bench, "wait_for_idle",
-                        lambda max_wait=None, poll=None: (0.5, 0.5, 0.5))
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.6, 0.5, 0.5))
-    unstamped_burst = {"contaminated": False,
-                       "ratios": {"mr_wc": 2.0},
-                       "ratios_v2": {},
-                       "load_before": (0.5, 0.5, 0.5),
-                       "load_after": (1.0, 0.8, 0.6),
-                       "load_peak": 12.0}
-    queries = {"mr_wc": (lambda s, d: s.range(3))}
-    out = bench.idle_rerun(spark, queries, sf_dir, unstamped_burst)
-    assert out is not None and sorted(out["timings"]) == ["mr_wc"]
-    assert out["idle"] is True
-
-
-def test_idle_rerun_retimes_spikes_and_reports_idleness(spark, sf_dir,
-                                                        monkeypatch):
-    """A contaminated chosen attempt with spiked ratios in either
-    generation re-times exactly those queries after the extra idle
-    wait, ratios against the frozen baselines, and reports whether the
-    window was genuinely idle."""
-    waited = []
-
-    def fake_wait(max_wait=None, poll=None):
-        waited.append(max_wait)
-        return (0.5, 0.5, 0.5)
-
-    monkeypatch.setattr(bench, "wait_for_idle", fake_wait)
-    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.6, 0.5, 0.5))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_IDLE_RERUN_WAIT_SEC", "7")
-    chosen = {"contaminated": True,
-              "ratios": {"mr_wc": 3.4, "lang_id": 0.9},
-              "ratios_v2": {"bpe_train": 1.6}}
-    queries = {n: (lambda s, d: s.range(3))
-               for n in ("mr_wc", "bpe_train")}
-    out = bench.idle_rerun(spark, queries, sf_dir, chosen)
-    assert sorted(out["timings"]) == ["bpe_train", "mr_wc"]
-    assert out["idle"] is True and waited == [7.0]
-    assert set(out["ratios"]) == {"bpe_train", "mr_wc"}
-    assert all(r > 0 for r in out["ratios"].values())
-    # a never-idle window is reported as such, not hidden
-    monkeypatch.setattr(bench, "wait_for_idle",
-                        lambda max_wait=None, poll=None: (9.0, 9.0, 9.0))
-    out2 = bench.idle_rerun(spark, queries, sf_dir, chosen)
-    assert out2["idle"] is False
+    line, fits = bench.contract_line(timings, timings_v2, 0.1, 7,
+                                     "/d" * bench.CONTRACT_LINE_MAX)
+    assert not fits and len(line) < bench.CONTRACT_LINE_MAX
+    rec = json.loads(line)
+    assert rec["notes"]["error"] == "contract_line_overflow"
+    assert rec["notes"]["len"] >= bench.CONTRACT_LINE_MAX
+    assert rec["value"] == round(sum(timings.values()), 3)

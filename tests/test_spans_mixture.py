@@ -11,7 +11,8 @@ import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entrymod
-from mit_6_5840_mapreduce_spark.operators.dedup import SPAN_TOKENS
+from mit_6_5840_mapreduce_spark.operators.dedup import (SPAN_TOKENS,
+                                                        scrub_positions)
 from mit_6_5840_mapreduce_spark.operators.mixture import RESAMPLE_BUCKETS
 
 
@@ -212,6 +213,13 @@ def test_span_scrub_cuts_higher_id_side_only(spark, tmp_path_factory):
     assert r1.scrubbed_text == "my own preamble my own tail"
     assert rows[2].n_cut == 0
     assert rows[2].scrubbed_text == texts[2]
+    # a cut position past the int range lies outside [1, n]: ignored,
+    # the same rows as no cut at all (not a cast overflow under ANSI)
+    schema = "doc_id bigint, pos bigint"
+    no_cut = scrub_positions(spark, d, spark.createDataFrame([], schema))
+    huge_cut = scrub_positions(
+        spark, d, spark.createDataFrame([(2, 2**31 + 5)], schema))
+    assert sorted(huge_cut.collect()) == sorted(no_cut.collect())
 
 
 def test_span_scrub_overlapping_spans_cut_once(spark, tmp_path_factory):

@@ -8,8 +8,8 @@ Usage:
     python tools/profile_query.py <sf_dir> --time-only query [query ...]
 
 Writes <out_dir>/<query>.txt with the formatted plan and prints one
-"<query> <seconds>" line per query (median of SPARK_GRAFT_BENCH_REPEAT
-runs, default 3 — same stat as bench.py).
+"<query> <seconds>" line per query (median of 3 runs — same stat as
+bench.py).
 """
 
 from __future__ import annotations
@@ -25,6 +25,8 @@ from mit_6_5840_mapreduce_spark.session import get_spark
 
 import __spark_entry__ as entrymod
 
+REPEAT = 3
+
 
 def main() -> int:
     sf_dir = sys.argv[1]
@@ -36,20 +38,6 @@ def main() -> int:
         print(f"ERROR: unknown queries {unknown}")
         return 2
     spark = get_spark("profile")
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3"))
-    # co-tenant contention gate (the bench.py wait_for_idle protocol):
-    # with SPARK_GRAFT_PROFILE_IDLE set, wait for 1-min loadavg below
-    # the threshold before EACH timed run, so before/after comparisons
-    # aren't polluted by host bursts (this box swings 2x under them)
-    idle = float(os.environ.get("SPARK_GRAFT_PROFILE_IDLE", "0"))
-
-    def wait_idle() -> None:
-        if idle <= 0:
-            return
-        deadline = time.time() + float(os.environ.get(
-            "SPARK_GRAFT_PROFILE_IDLE_WAIT_SEC", "600"))
-        while os.getloadavg()[0] >= idle and time.time() < deadline:
-            time.sleep(5)
     # warm-up (bench protocol: JIT/codegen paid before measurement)
     queries["q4_order_priority"](spark, sf_dir).write.mode(
         "overwrite").format("noop").save()
@@ -61,9 +49,8 @@ def main() -> int:
             with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
                 f.write(plan)
         runs = []
-        for _ in range(repeat):
+        for _ in range(REPEAT):
             spark.catalog.clearCache()
-            wait_idle()
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).write.mode("overwrite") \
