@@ -1013,54 +1013,46 @@ SPAN_TOKENS = 10                # exact-substring window width (tokens)
 SPAN_OCC_CAP = 20
 
 
-# Memoized persisted window frames, keyed by (applicationId, sf_dir,
-# corpus stamp): a persisted DataFrame is owned by the SparkContext,
-# and applicationId is stable for the context's lifetime, so the key
-# dies with the cache it names. Without this, every span-family call
-# re-persisted a fresh corpus-token-sized frame and never released it
-# — dedup_span_scrub / decontaminate_span_scrub stack 2-3 such frames
-# PER INVOCATION, and a long-lived session (the driver gate runs
-# dozens of queries on one session) accumulates them until the storage
-# memory pool churns (ADVICE r10). One frame per (app, corpus) is the
-# steady state every consumer shares; re-calling is now free. The
-# STAMP (mtime_ns + size of documents.parquet, r11 review) keeps a
-# corpus REWRITTEN at the same path from being served stale windows —
-# the fixed-scratch-dir pattern probes and notebooks use; entries from
-# other applications (stopped contexts) are evicted on insert.
+# Memoized persisted span frames (token arrays, hashed windows), keyed
+# by (applicationId, kind, sf_dir, corpus stamp). A persisted DataFrame
+# is owned by its SparkContext, so keying by applicationId lets the
+# entry die with the cache it names; one frame per (app, corpus) is
+# shared by every span consumer instead of each call persisting a new
+# corpus-token-sized frame that nothing releases. The stamp (mtime_ns
+# + size of documents.parquet) keeps a corpus rewritten at the same
+# path from being served stale windows. Entries of other (stopped)
+# applications are evicted on insert.
+#
+# Measured (4 cores, per-query medians): without persistence
+# (SPAN_WINDOWS_PERSIST=False) 6 of the 7 span queries (the five span
+# queries, epoch_assembly, curation_summary) were slower in all 6
+# alternating pairs at sf0.01 — dedup_span_scrub 1.61 s -> 2.22 s, the
+# seven 9.2 s -> 11.5 s. Replacing the memo with a plain .persist() per
+# call left action time unchanged at sf0.1 but roughly doubled build
+# time (dedup_span_scrub 0.26 s -> ~0.5 s), and served stale windows
+# after an in-place corpus rewrite
+# (test_span_windows_cache_sees_corpus_rewrite fails). So it stays.
 _SPAN_WINDOWS_CACHE: dict[tuple[str, str, tuple], DataFrame] = {}
-# max memoized frames per application: covers the realistic working
-# set (the gate corpus + a planted corpus or two) while bounding a
-# many-corpus session to a constant number of resident frames
+# max memoized frames per (application, kind): the working set (one
+# corpus plus a planted one or two) while bounding a many-corpus
+# session to a constant number of resident frames
 _SPAN_WINDOWS_CACHE_PER_APP = 3
-# Storage level for the memoized window frames — the 100 TB story
-# (VERDICT r11 item 4, docs/SCALE.md "span-window persistence"):
-# MEMORY_AND_DISK_DESER (the DataFrame default, now explicit) with
-# ACCEPT-RECOMPUTE degradation. The frame is corpus-token-sized, so at
-# 100 TB it exceeds the aggregate storage pool; under this level the
-# block manager spills evicted partitions to local disk and, past
-# disk, DROPS blocks — a consumer touching a dropped partition
-# recomputes it from the column-pruned parquet scan (one tokenize +
-# hash pass, the cheap stage; the expensive stages — the population
-# cap and the self-join — always run downstream of whatever is
-# resident). Correctness is unaffected at every degradation step;
-# worst case is one extra scan per consumer, which beats both
-# DISK_ONLY (pays the write+read even at gate scale where memory
-# fits) and pinning (OOM-prone memory pressure on every co-tenant
-# stage). tests/test_spans_mixture.py pins the no-persist worst case
-# to value-identical results.
+# Storage level for the memoized frames (docs/SCALE.md "span-window
+# persistence"): MEMORY_AND_DISK_DESER with accept-recompute
+# degradation. The frame is corpus-token-sized, so at 100 TB it exceeds
+# the storage pool; evicted partitions spill to disk and, past disk,
+# are dropped and recomputed from the column-pruned scan (the cheap
+# tokenize + hash stage; the population cap and self-join run
+# downstream of whatever is resident). Values are unaffected at every
+# step; the worst case is one extra scan per consumer, cheaper than
+# DISK_ONLY at gate scale and safer than pinning.
 _SPAN_WINDOWS_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
-# Test/probe knob: False simulates the TOTAL-degradation endpoint of
-# accept-recompute (every block dropped — no persist, no memo), so the
-# worst case is pinned value-identical, not assumed
+# Test/probe switch: False is the total-degradation endpoint (no
+# persist, no memo), pinned value-identical by test_spans_mixture.py
 SPAN_WINDOWS_PERSIST = True
-# serializes the lookup/evict/insert sequence: Spark drivers are
-# routinely multi-threaded (concurrent action threads are the
-# documented way to overlap jobs), and an unguarded miss from two
-# threads computes two persisted frames, the second insert orphaning
-# the first forever — the ADVICE-r10 leak reintroduced under
-# concurrency (ADVICE r11). Plan CONSTRUCTION under the lock is
-# driver-side metadata work only (no job runs until an action), so
-# the critical section is cheap.
+# serializes lookup/evict/insert: drivers run concurrent action
+# threads, and an unguarded miss from two threads would persist two
+# frames and orphan the first
 _SPAN_WINDOWS_LOCK = threading.Lock()
 
 
@@ -1080,10 +1072,8 @@ def _corpus_stamp(sf_dir: str) -> tuple:
         try:
             s = os.stat(os.path.join(path, name))
         except OSError:
-            # a part file deleted between listdir and stat (concurrent
-            # overwrite of the directory layout — the very scenario the
-            # stamp defends against): record the name as gone; the next
-            # call sees a different stamp and recomputes
+            # deleted between listdir and stat (a concurrent rewrite):
+            # the next call sees a different stamp and recomputes
             entries.append((name, "gone"))
             continue
         entries.append((name, s.st_mtime_ns, s.st_size))
@@ -1091,10 +1081,9 @@ def _corpus_stamp(sf_dir: str) -> tuple:
 
 
 def _restore_persist(cached: DataFrame) -> DataFrame:
-    """An external spark.catalog.clearCache() (bench does this between
-    timed runs) unpersists a memoized frame behind our back; restore
-    the persist contract so multi-consumer reads stay one-compute
-    (correctness is unaffected either way)."""
+    """Re-persist a memoized frame an external
+    ``spark.catalog.clearCache()`` unpersisted, so multi-consumer reads
+    stay one-compute (values are unaffected either way)."""
     lvl = cached.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
         cached.persist(_SPAN_WINDOWS_STORAGE)
@@ -1102,11 +1091,8 @@ def _restore_persist(cached: DataFrame) -> DataFrame:
 
 
 def _lru_touch(key: tuple) -> None:
-    """Recency refresh on a cache hit (ADVICE r12): the per-(app, kind)
-    bound below evicts by dict insertion order, so a hit must re-insert
-    its key or a session cycling through more corpora than the bound
-    can evict the hottest frame while colder entries survive (perf
-    only — values are stamp-keyed either way). Caller holds
+    """Recency refresh on a cache hit: the per-(app, kind) bound evicts
+    by dict insertion order, so a hit re-inserts its key. Caller holds
     ``_SPAN_WINDOWS_LOCK``."""
     _SPAN_WINDOWS_CACHE[key] = _SPAN_WINDOWS_CACHE.pop(key)
 
@@ -1115,12 +1101,11 @@ def _memo_frame(spark: SparkSession, kind: str, sf_dir: str,
                 build) -> DataFrame:
     """Persist-and-memoize ``build()`` per (application, kind, sf_dir,
     corpus stamp) — the shared machinery behind ``_token_arrays`` and
-    ``_span_windows``. Double-checked locking (r12 review): plan
-    CONSTRUCTION runs OUTSIDE the lock — load_table's schema read
-    lists parquet footers, which at 100 TB is real driver work, and a
-    cache HIT for one corpus must not block behind a MISS build for
-    another — so a racing loser's frame is simply discarded before it
-    was ever persisted (no leak; ADVICE r11)."""
+    ``_span_windows``. Double-checked locking: ``build()`` runs outside
+    the lock (its schema read lists parquet footers, real driver work
+    at 100 TB, and a hit for one corpus must not wait behind a miss for
+    another); a racing loser's frame is discarded before it is ever
+    persisted."""
     app = spark.sparkContext.applicationId
     path = os.path.abspath(sf_dir)
     key = (app, kind, path, _corpus_stamp(sf_dir))
@@ -1131,22 +1116,12 @@ def _memo_frame(spark: SparkSession, kind: str, sf_dir: str,
             return _restore_persist(cached)
     frame = build()                     # outside the lock: metadata work
     with _SPAN_WINDOWS_LOCK:
-        # The insert key deliberately keeps the stamp read BEFORE
-        # build() (ADVICE r12, resolved per its accept-and-document
-        # option after the r13 review): spark.read pins the parquet
-        # FILE LISTING at plan construction (InMemoryFileIndex), so a
-        # frame planned before a mid-build corpus rewrite references
-        # the pre-rewrite part files forever. Keying it under the
-        # pre-build stamp is the self-healing choice — no post-rewrite
-        # caller can ever hit it (their fresh stamp differs), and the
-        # first post-rewrite insert evicts it via the same-(kind, path)
-        # stale-stamp sweep below. Re-stamping at insert (the r13
-        # first attempt) would do the opposite: cache the old-listing
-        # frame under the POST-rewrite stamp, poisoning every future
-        # caller with deleted-file reads. The only loser under the
-        # pre-build key is a caller already racing the rewrite, whose
-        # read was doomed to one of the two corpus states anyway — the
-        # irreducible window every stamp scheme has.
+        # Insert under the stamp read BEFORE build(): spark.read pins
+        # the file listing at plan construction, so a frame planned
+        # before a mid-build rewrite reads the old part files. Keyed
+        # by the old stamp, no post-rewrite caller can hit it, and the
+        # first post-rewrite insert evicts it below; keying it by a
+        # fresh stamp would serve deleted files to every later caller.
         cached = _SPAN_WINDOWS_CACHE.get(key)
         if cached is not None:          # a racer inserted first: use its
             _lru_touch(key)
@@ -1161,14 +1136,10 @@ def _memo_frame(spark: SparkSession, kind: str, sf_dir: str,
                 except Exception:
                     pass        # context mid-shutdown: nothing to free
             del _SPAN_WINDOWS_CACHE[k]
-        # bound the per-(app, kind) population (r11 review): a long
-        # session touching many corpora (the battery's planted tmp
-        # dirs, the scale probe's per-factor dirs) would otherwise hold
-        # one persisted corpus-token-sized frame PER DIRECTORY — the
-        # ADVICE-r10 symptom keyed by path instead of by call. Keep the
-        # most recently USED few (hits re-insert via _lru_touch, so
-        # dict insertion order is recency order); unpersist-and-drop
-        # the least recently used.
+        # bound the per-(app, kind) population so a session touching
+        # many corpora does not hold one persisted frame per directory:
+        # unpersist and drop the least recently used (dict order is
+        # recency order, see _lru_touch)
         same = [k for k in _SPAN_WINDOWS_CACHE if k[:2] == key[:2]]
         while len(same) >= _SPAN_WINDOWS_CACHE_PER_APP:
             oldest = same.pop(0)
@@ -1184,14 +1155,11 @@ def _memo_frame(spark: SparkSession, kind: str, sf_dir: str,
 
 def _token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, toks): the tokenized corpus, persisted and memoized —
-    THE shared materialization of the whole span/scrub family (r12
-    review): ``_span_windows`` derives its hashed windows from it and
+    the shared materialization of the span/scrub family:
+    ``_span_windows`` derives its hashed windows from it and
     ``scrub_positions`` recomposes text from it, so a query composing
     both (``dedup_span_scrub``, ``decontaminate_span_scrub``,
-    ``epoch_assembly``) tokenizes the corpus ONCE per session instead
-    of once per stage — and the scrub stage no longer persists a
-    private per-call frame that nothing ever released (the ADVICE-r10
-    defect class, previously fixed for windows only)."""
+    ``epoch_assembly``) tokenizes the corpus once per session."""
     def build() -> DataFrame:
         docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
         return docs.select("doc_id",

@@ -7,8 +7,6 @@ each query is one codegen'd scan + at most one shuffle at any scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -649,21 +647,6 @@ PACK_SUBSHARD_DOCS = 4096
 PACK_HOT_DOCS = 10_000_000
 
 
-def _pack_mode() -> str:
-    """Packing form selection: the ``SPARK_GRAFT_PACK_TWO_PASS`` knob
-    (read at call time so probes/tests flip it per run) forces a form
-    ("1" = two-pass, "0" = window); otherwise ``pack_assignment``
-    decides from the staged frame's own per-source counts — the
-    100 TB default no longer rides on an operator remembering to flip
-    a knob (VERDICT r13 item 3)."""
-    v = os.environ.get("SPARK_GRAFT_PACK_TWO_PASS", "")
-    if v == "1":
-        return "two_pass"
-    if v == "0":
-        return "window"
-    return "auto"
-
-
 def pack_assignment(staged: DataFrame, n_col: str) -> DataFrame:
     """THE packing rule, single-sourced (VERDICT r12 item 3): documents
     concatenate per source in doc_id order; ``start_offset`` is the
@@ -695,15 +678,12 @@ def pack_assignment(staged: DataFrame, n_col: str) -> DataFrame:
     token-count expression away, so this scans just the source column;
     the result is ONE scalar to the driver — the ivf_train rule)
     reads the hottest source's row count and picks two-pass past
-    PACK_HOT_DOCS. The env knob still forces either form (probes,
-    tests, operator override)."""
+    PACK_HOT_DOCS. Probes and tests force a form by setting
+    PACK_HOT_DOCS (0 for two-pass, above every source for window)."""
     from pyspark.sql.window import Window
-    mode = _pack_mode()
-    if mode == "auto":
-        hot = (staged.groupBy("source").count()
-               .agg(F.max("count")).collect()[0][0]) or 0
-        mode = "two_pass" if hot > PACK_HOT_DOCS else "window"
-    if mode == "window":
+    hot = (staged.groupBy("source").count()
+           .agg(F.max("count")).collect()[0][0]) or 0
+    if hot <= PACK_HOT_DOCS:
         w = Window.partitionBy("source").orderBy("doc_id") \
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         cum = staged.withColumn("cum", F.sum(n_col).over(w))

@@ -1,10 +1,7 @@
 from mit_6_5840_mapreduce_spark.plans.explain import (  # noqa: F401
     executed_plan,
     formatted_plan,
-    has_broadcast_join,
-    has_cartesian_product,
-    has_python_eval,
+    plan_shape,
     pushed_filters,
     read_schema,
-    unpartitioned_windows,
 )

@@ -305,7 +305,7 @@ def _await_or_fail(q, timeout_sec: int, what: str) -> None:
 # STREAM_PARTS_PER_CORE x cores (the sizing a long-running deployment
 # would pin so state redistribution headroom exists). Partition count
 # never changes RESULTS — grouping/join keys are logical — only where
-# state lives. Env override: SPARK_GRAFT_STREAM_PARTITIONS.
+# state lives.
 
 STREAM_PART_TARGET_BYTES = 32 << 20
 STREAM_PARTS_PER_CORE = 4
@@ -314,9 +314,6 @@ STREAM_PARTS_PER_CORE = 4
 def stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Input-size-derived shuffle/state partition count for the
     availableNow streaming queries over ``sf_dir``'s events source."""
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "")
-    if override:
-        return max(1, int(override))
     path = os.path.join(sf_dir, "events.parquet")
     try:
         if os.path.isdir(path):

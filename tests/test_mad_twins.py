@@ -12,7 +12,7 @@ from mit_6_5840_mapreduce_spark.operators.events import (
     user_value_mad,
     user_value_mad_sql,
 )
-from mit_6_5840_mapreduce_spark.plans import has_python_eval
+from mit_6_5840_mapreduce_spark.plans import plan_shape
 
 
 def _rows(df):
@@ -27,4 +27,4 @@ def test_mad_twins_agree_exactly(spark, sf_dir):
 
 
 def test_mad_sql_twin_stays_jvm_side(spark, sf_dir):
-    assert not has_python_eval(user_value_mad_sql(spark, sf_dir))
+    assert "python" not in plan_shape(user_value_mad_sql(spark, sf_dir))

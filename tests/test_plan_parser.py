@@ -1,14 +1,16 @@
-"""Unit tests for the physical-plan Window-node parser (no Spark).
+"""Unit tests for the physical-plan text parsers (no Spark).
 
 The unpartitioned-window audit rule rests on the shape of Spark's
-`Window [funcs], [partitionSpec], [orderSpec]` node string; these pin
-the bracket parser on captured plan-line shapes so a regression in the
-parsing (not just the rule) fails loudly and cheaply.
+`Window [funcs], [partitionSpec], [orderSpec]` node string, and the
+plan-shape ledger on the node names of the tree string; these pin both
+parsers on captured plan shapes so a regression in the parsing (not
+just the rule) fails loudly and cheaply.
 """
 
 from __future__ import annotations
 
 from mit_6_5840_mapreduce_spark.plans.explain import (
+    _shape,
     _top_level_bracket_groups,
     unpartitioned_window_lines,
 )
@@ -79,6 +81,52 @@ def test_windowinpandas_is_covered():
     part = ("+- WindowInPandas [pudf(v#2) AS out#3], [k#1], "
             "[ts#4 ASC NULLS FIRST]")
     assert unpartitioned_window_lines(part) == []
+
+
+
+# a cached relation computed before the plan was taken prints its AQE
+# plan twice: the runtime final plan, then the initial plan
+CACHED_FINAL_AND_INITIAL = """\
+AdaptiveSparkPlan isFinalPlan=false
++- BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false
+   :- *(1) Filter isnotnull(k#1)
+   :  +- InMemoryTableScan [k#1]
+   :        +- InMemoryRelation [k#1], StorageLevel(disk, memory, 1 replicas)
+   :              +- AdaptiveSparkPlan isFinalPlan=true
+                     +- == Final Plan ==
+                        ResultQueryStage 1
+                        +- ShuffleQueryStage 0
+                           +- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM
+                              +- *(1) ColumnarToRow
+                                 +- FileScan parquet [k#1]
+                     +- == Initial Plan ==
+                        Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM
+                        +- FileScan parquet [k#1]
+   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false)
+      +- WindowGroupLimit [k#2], [v#3 DESC NULLS LAST], row_number(), 1
+         +- Sort [k#2 ASC NULLS FIRST, v#3 DESC NULLS LAST], false, 0
+            +- ReusedExchange [k#2, v#3], Exchange hashpartitioning(k#2, 10)
+"""
+
+
+def test_plan_shape_counts_initial_plan_nodes_by_name():
+    """Final-plan sections are skipped, codegen ids and tree prefixes
+    are stripped, and only exact node names count: a ReusedExchange is
+    no shuffle and a WindowGroupLimit is no Window."""
+    assert _shape(CACHED_FINAL_AND_INITIAL) == {
+        "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Exchange": 1,
+        "Sort": 1}
+
+
+def test_plan_shape_counts_python_nodes_and_unpartitioned_windows():
+    plan = "\n".join([
+        "*(2) Project [doc_id#1L]",
+        "+- BatchEvalPythonUDTF chunk_docs_udtf(doc_id#1L)#5, [text#2]",
+        "   +- MapInPandas <lambda>(a#1)#4, [b#2], false",
+        "      +- ArrowEvalPython [f(a#1)#3], [pythonUDF0#9], 200",
+        UNPARTITIONED, PARTITIONED])
+    assert _shape(plan) == {"Window": 2, "python": 3,
+                            "unpartitioned_window": 1}
 
 
 def _ntile_reference(n: int, k: int = 4) -> list[int]:

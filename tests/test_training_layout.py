@@ -116,15 +116,15 @@ def hot_source_dir(spark, tmp_path_factory):
 
 def test_pack_two_pass_is_value_identical(spark, hot_source_dir,
                                           monkeypatch):
-    """The two-pass sub-sharded prefix sum (SPARK_GRAFT_PACK_TWO_PASS=1,
-    VERDICT r12 item 4) must produce byte-identical packing to the
-    single-window form: the offset arithmetic is independent of how
-    the prefix sum was computed. Sub-shard width patched small so the
-    hot source genuinely spans many sub-shards."""
+    """The two-pass sub-sharded prefix sum (forced by PACK_HOT_DOCS=0)
+    must produce byte-identical packing to the single-window form: the
+    offset arithmetic is independent of how the prefix sum was
+    computed. Sub-shard width patched small so the hot source genuinely
+    spans many sub-shards."""
     single = sorted(map(tuple,
                         pack_sequences(spark, hot_source_dir).collect()))
     assert len(single) == 400
-    monkeypatch.setenv("SPARK_GRAFT_PACK_TWO_PASS", "1")
+    monkeypatch.setattr(textstats, "PACK_HOT_DOCS", 0)
     monkeypatch.setattr(textstats, "PACK_SUBSHARD_DOCS", 16)
     two_pass = sorted(map(tuple,
                           pack_sequences(spark, hot_source_dir).collect()))
@@ -139,7 +139,7 @@ def test_epoch_assembly_identical_under_two_pass_packing(
     q = entrymod.queries()["epoch_assembly"]
     single = sorted(map(tuple, q(spark, hot_source_dir).collect()))
     assert single, "planted corpus packed no sequences"
-    monkeypatch.setenv("SPARK_GRAFT_PACK_TWO_PASS", "1")
+    monkeypatch.setattr(textstats, "PACK_HOT_DOCS", 0)
     monkeypatch.setattr(textstats, "PACK_SUBSHARD_DOCS", 16)
     two_pass = sorted(map(tuple, q(spark, hot_source_dir).collect()))
     assert two_pass == single
@@ -147,13 +147,11 @@ def test_epoch_assembly_identical_under_two_pass_packing(
 
 def test_pack_auto_selects_two_pass_past_hot_doc_boundary(
         spark, hot_source_dir, monkeypatch):
-    """VERDICT r13 item 3: with the env knob unset, pack_assignment
-    picks its form from the staged frame's own per-source counts.
-    Patch the boundary to straddle the planted hot source (360 docs)
-    from both sides and pin (a) which form runs — observed through the
-    plan's window-spec signature — and (b) that values are identical
-    across the boundary."""
-    monkeypatch.delenv("SPARK_GRAFT_PACK_TWO_PASS", raising=False)
+    """pack_assignment picks its form from the staged frame's own
+    per-source counts. Patch the boundary to straddle the planted hot
+    source (360 docs) from both sides and pin (a) which form runs —
+    observed through the plan's window-spec signature — and (b) that
+    values are identical across the boundary."""
     monkeypatch.setattr(textstats, "PACK_SUBSHARD_DOCS", 16)
 
     def plan(df):
@@ -171,18 +169,3 @@ def test_pack_auto_selects_two_pass_past_hot_doc_boundary(
     assert "sub" in plan(above)
     rows_above = sorted(map(tuple, above.collect()))
     assert rows_above == rows_below and len(rows_below) == 400
-
-
-def test_pack_env_knob_overrides_auto(spark, hot_source_dir, monkeypatch):
-    """The knob stays an override: '0' forces the window form even when
-    the auto rule would pick two-pass."""
-    monkeypatch.setattr(textstats, "PACK_SUBSHARD_DOCS", 16)
-    monkeypatch.setattr(textstats, "PACK_HOT_DOCS", 100)
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    monkeypatch.setenv("SPARK_GRAFT_PACK_TWO_PASS", "0")
-    assert "sub" not in plan(pack_sequences(spark, hot_source_dir))
-    monkeypatch.setenv("SPARK_GRAFT_PACK_TWO_PASS", "1")
-    assert "sub" in plan(pack_sequences(spark, hot_source_dir))

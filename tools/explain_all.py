@@ -1,79 +1,57 @@
-"""Plan audit: dump the executed plan of every registered query and
-flag scale anti-patterns (cartesian products, row-at-a-time Python,
-scans that read every column). Usage: python tools/explain_all.py
-[sf_dir] [out_path]."""
+"""Plan-shape ledger: build every registered query at sf0.001, in a
+session built like tests/conftest.py, and write each query's
+``plan_shape`` (shuffles, broadcasts, join kinds, sorts, windows,
+generators, Python nodes, unpartitioned windows) to
+tests/plan_ledger.json, one sorted line per query.
+
+    python tools/explain_all.py
+
+tests/test_plans.py rebuilds the same shapes and fails on any
+difference, so a change that moves a plan count regenerates the ledger
+in the same commit and its diff shows the plan cost."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from mit_6_5840_mapreduce_spark.plans.explain import unpartitioned_window_lines
+from mit_6_5840_mapreduce_spark.plans.explain import plan_shape
 from mit_6_5840_mapreduce_spark.session import get_spark
 
 import __spark_entry__ as entrymod
 
-# deliberate exceptions, mirrored from tests/test_plans.py
-PYTHON_PATH_OK = {"multimodal_meta", "frame_sample", "user_value_mad",
-                  "image_decode_stats", "audio_decode_stats",
-                  "gif_decode_stats", "video_frame_stats",
-                  "media_features", "payload_thumbnail",
-                  "embedding_topk_pandas", "doc_chunks_udtf",
-                  "media_decode_stats", "hnsw_search",
-                  "hnsw_search_persisted",
-                  # decoded-pixel perceptual hash: real codec in the batch
-                  "image_phash", "image_phash_neardup",
-                  # partition-local skyline: vectorized numpy per batch
-                  "skyline_pareto"}
-CARTESIAN_OK = {"embedding_neardup_exact", "embedding_neardup",
-                "lsh_recall_eval"}   # embeds the exact anchor as truth
-# executes a stream / an iterative loop when called — plan of the final
-# materialized result only
-MATERIALIZING = {"stream_hourly_counts", "stream_dedup_events",
-                 "stream_user_totals", "dedup_groups", "ivf_train",
-                 "doc_pagerank", "bpe_train", "bpe_encode", "doc_bfs",
-                 # materializes the hnsw candidate artifact eagerly;
-                 # final plan = artifact scan + exact top-k join
-                 "graph_recall_eval"}
-# Unpartitioned (global-sort) Window nodes whose FRAME IS BOUNDED by
-# something other than data volume — the only acceptable class
-# (VERDICT r5 what's-wrong #4). Everything else with an empty partition
-# spec is a single-task sort over data-cardinality rows and gets
-# flagged. Mirrored in tests/test_plans.py.
-GLOBAL_WINDOW_OK = {
-    # calendar-bounded spines: one row per day/hour/month — the frame
-    # grows with the calendar, not the data
-    "user_growth_accounting", "orders_monthly_growth",
-    "daily_revenue_trailing", "hourly_burst_detection",
-}
+LEDGER_PATH = os.path.join(ROOT, "tests", "plan_ledger.json")
+# broadcast choices follow the input sizes, so the ledger has ONE scale
+LEDGER_SF_DIR = "/root/testdata/sf0.001"
+
+
+def registry_shapes(spark) -> dict[str, dict[str, int]]:
+    """``plan_shape`` of every registered query, each built once on an
+    empty cache so no frame persisted by an earlier build (or test)
+    changes the plan."""
+    shapes = {}
+    for name, fn in entrymod.queries().items():
+        spark.catalog.clearCache()
+        shapes[name] = plan_shape(fn(spark, LEDGER_SF_DIR))
+    return shapes
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/plans.txt"
-    spark = get_spark("explain-all")
-    flags = []
-    with open(out_path, "w") as out:
-        for name, fn in entrymod.queries().items():
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            out.write(f"{'=' * 72}\n{name}\n{'=' * 72}\n{plan}\n")
-            if "CartesianProduct" in plan and name not in CARTESIAN_OK:
-                flags.append((name, "CartesianProduct"))
-            py = ("EvalPython" in plan or "MapInPandas" in plan
-                  or "FlatMapGroupsInPandas" in plan)
-            if py and name not in PYTHON_PATH_OK | MATERIALIZING:
-                flags.append((name, "python row path"))
-            gw = unpartitioned_window_lines(plan)
-            if gw and name not in GLOBAL_WINDOW_OK:
-                flags.append((name, f"unpartitioned window: {gw[0][:120]}"))
-    for name, what in flags:
-        print(f"FLAG {name}: {what}")
-    print(f"{len(flags)} flags; plans -> {out_path}")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    spark = get_spark("explain-all", shuffle_partitions=10,
+                      extra_conf={"spark.master": "local[4,2]"})
+    shapes = registry_shapes(spark)
     spark.stop()
-    return 1 if flags else 0
+    with open(LEDGER_PATH, "w") as out:
+        out.write("{\n" + ",\n".join(
+            f"{json.dumps(name)}: {json.dumps(shapes[name])}"
+            for name in sorted(shapes)) + "\n}\n")
+    print(f"{len(shapes)} queries -> {LEDGER_PATH}")
+    return 0
 
 
 if __name__ == "__main__":

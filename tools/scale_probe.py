@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from mit_6_5840_mapreduce_spark.operators import registry
+from mit_6_5840_mapreduce_spark.operators import registry, textstats
 from mit_6_5840_mapreduce_spark.session import get_spark
 from mit_6_5840_mapreduce_spark.sources.tables import load_table
 
@@ -159,7 +159,7 @@ def _span_corpus(out_dir: str, factor: int) -> None:
 # spread over 4 cold sources — cold ids are multiples of 10, so
 # id % 8 only takes {0, 2, 4, 6}) and times BOTH physical forms — the
 # default single window and the two-pass sub-sharded scan
-# (SPARK_GRAFT_PACK_TWO_PASS=1; value-identity is pinned by
+# (forced by PACK_HOT_DOCS=0; value-identity is pinned by
 # tests/test_training_layout.py, so this probe measures wall only).
 # Measured on an idle host, min of 3, warm JVM (r13): the single
 # window wins at 8x (720k hot docs: 1.18s vs 1.49s) and still —
@@ -412,13 +412,15 @@ def main() -> int:
 
     # Hot-source pack probe (r13) — see _hot_source_corpus
     hot_res: dict[tuple[str, int], float] = {}
+    pack_hot_docs = textstats.PACK_HOT_DOCS
     HOT_FACTORS = (8, 256)       # brackets the measured crossover
     for factor in HOT_FACTORS:
         hwork = os.path.join(tempfile.gettempdir(), f"hot_pack_{factor}x")
         os.makedirs(hwork, exist_ok=True)
         _hot_source_corpus(spark, hwork, factor)
-        for form, env in (("window", "0"), ("two_pass", "1")):
-            os.environ["SPARK_GRAFT_PACK_TWO_PASS"] = env
+        # force each form through the auto-switch boundary
+        for form, hot_docs in (("window", 1 << 62), ("two_pass", 0)):
+            textstats.PACK_HOT_DOCS = hot_docs
             best = float("inf")
             for _ in range(3):      # min of 3 — the crossover protocol
                 spark.catalog.clearCache()
@@ -427,7 +429,7 @@ def main() -> int:
                     "overwrite").format("noop").save()
                 best = min(best, time.perf_counter() - t0)
             hot_res[(form, factor)] = round(best, 2)
-        os.environ["SPARK_GRAFT_PACK_TWO_PASS"] = "0"
+    textstats.PACK_HOT_DOCS = pack_hot_docs
     for form in ("window", "two_pass"):
         w1, wn = hot_res[(form, HOT_FACTORS[0])], hot_res[(form,
                                                            HOT_FACTORS[-1])]
