@@ -108,7 +108,8 @@ def mr_run(
             mapped
             .reduceByKey(combinef, numPartitions=n_reduce,
                          partitionFunc=ihash)         # map-side combine
-            .map(lambda kv: (kv[0], fin(kv[0], kv[1])))
+            .map(lambda kv: (kv[0], fin(kv[0], kv[1])),
+                 preservesPartitioning=True)
         )
     else:
         if reducef is None:
@@ -122,7 +123,8 @@ def mr_run(
             mapped
             .groupByKey(numPartitions=n_reduce,
                         partitionFunc=ihash)          # shuffle+group
-            .map(apply_reduce)                        # reduce phase
+            .map(apply_reduce,
+                 preservesPartitioning=True)          # reduce phase
         )
 
     return (

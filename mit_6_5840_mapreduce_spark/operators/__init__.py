@@ -39,62 +39,39 @@ def _with_package(fn: Callable[[SparkSession, str], DataFrame]
 
 # The driver's CORRECTNESS gate verifies the FIRST 50 registry entries
 # each round, so window composition is an explicit, reviewed list rather
-# than an accident of module ordering. Round-13 window, composed under
-# the steady-state policy (sentinels + round-changed + new + stalest
-# certs, tools/window_plan.py's draft; NO new registrations this
-# round): the sentinel set kept in-window EVERY round; SIX
-# round-changed queries — epoch_assembly (now composes the
-# single-sourced pack_assignment/shuffle_assignment rules, VERDICT
-# r12 item 3) and the five span-family queries (the shared memo's
-# eviction is LRU rather than FIFO and the corpus stamp is re-read
-# under the insert lock — ADVICE r12; values unchanged by design);
-# then the staleness rotation, oldest cert first with name tiebreak:
-# the ENTIRE 21-name r8 tail lands on schedule (pack_sequences ..
-# user_value_trend — VERDICT r12 item 1; pack_sequences and
-# training_shuffle are also round-changed by the single-sourcing
-# refactor, so their rotation doubles as re-certification), plus the
-# first 19 of the 42-name r9 cohort in name order (ann_recall_eval ..
-# heavy_hitters_cms_direct; the 23-name r9 tail is scheduled for r14,
-# inside the cohort's 5-round ceiling).
-# 4 + 6 + 21 + 19 = 50, no free slots.
-# tests/test_registry_window.py pins this.
+# than an accident of module ordering. Policy: the four sentinels every
+# round; then every query whose plan, values or oracle changed since its
+# last certification; then the stalest certs from
+# tools/window_plan.py's staleness report, oldest round first with name
+# tiebreak, until the window is full. tests/test_registry_window.py
+# pins this list.
 WINDOW_SIZE = 50
 
 WINDOW_FIRST: tuple[str, ...] = (
     # sentinels (every round)
     "mr_wc", "mr_wc_rdd", "dedup_exact", "stream_hourly_counts",
-    # round-13 changed: the epoch capstone now renders its pack and
-    # shuffle stages through the single-sourced rules (VERDICT r12
-    # item 3) ...
-    "epoch_assembly",
-    # ... and the span family consumes the memo hardened per ADVICE
-    # r12 (LRU eviction; inserts keyed by the PRE-build corpus stamp —
-    # the accept-and-document design: a frame built over a mid-rewrite
-    # corpus is keyed by the stamp read BEFORE the build, so fresh-stamp
-    # callers never reach it and the next insert sweep evicts it)
-    "dedup_span_pairs", "dedup_span_scrub", "duplicate_spans",
-    "contamination_spans", "decontaminate_span_scrub",
-    # staleness rotation, oldest first: the full 21-name r8 tail —
-    # after this round no query's latest cert is <= r8
-    "pack_sequences", "part_name_analysis", "priority_status_cube",
-    "q16_parts_supplier_relationship", "q4_order_priority",
-    "repeat_customers", "sales_rollup", "sessionize",
-    "shingle_containment", "shingle_containment_capped",
-    "skewsafe_type_user_counts", "stream_foreachbatch_roundtrip",
-    "stream_topk_event_types", "table_profile", "training_shuffle",
-    "user_event_pivot", "user_event_sequences",
-    "user_event_sequences_capped", "user_type_count_map",
-    "user_value_mad", "user_value_trend",
-    # staleness rotation: the r9 cohort, first 19 in name order (the
-    # 23-name tail image_phash .. zorder_layout_stats is scheduled
-    # for r14)
-    "ann_recall_eval", "asof_join_orders", "audio_decode_stats",
-    "bloom_prune_join", "bucketed_join_stats", "cdc_apply",
-    "curation_summary", "customer_rfm", "customer_value_quartiles",
-    "data_quality_audit", "dedup_eval", "dedup_incremental",
-    "dedup_index_build", "doc_bfs", "doc_lm_score",
-    "embedding_neardup", "funnel_windowed", "heavy_hitters_cms",
-    "heavy_hitters_cms_direct",
+    # changed: every stream runs through one availableNow runner
+    "stream_sliding_counts", "stream_dedup_events", "stream_user_totals",
+    "stream_enriched_events", "stream_foreachbatch_roundtrip",
+    "stream_topk_event_types", "stream_topk_stateful",
+    "stream_sessionize", "stream_attribution", "stream_cdc_upsert",
+    # changed: the MR reduce output keeps its partitioner (one shuffle)
+    "mr_wc_assoc", "mr_indexer_rdd",
+    # changed: scrub_positions builds its position mask in bigint
+    "dedup_span_scrub", "decontaminate_span_scrub", "epoch_assembly",
+    # staleness: the r9 certs, then the r10 certs in name order
+    "image_phash", "image_phash_neardup", "ivfpq_search",
+    "media_features", "mr_indexer", "mv_incremental_refresh",
+    "pq_encode", "pq_search", "q11_important_stock",
+    "q9_product_type_profit", "quality_ensemble", "similarity_triangles",
+    "skyline_pareto", "source_mix_weights", "table_diff",
+    "temperature_resample", "user_event_unpivot",
+    "user_growth_accounting", "user_scd2", "user_value_outliers",
+    "zorder_layout_stats",
+    "dedup_fuzzy_verify", "dedup_groups", "dedup_groups_capped",
+    "dedup_keep_best", "dedup_keep_best_capped", "dedup_minhash_lsh",
+    "dedup_minhash_lsh_capped", "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_capped", "dedup_simhash",
 )
 
 
@@ -117,14 +94,9 @@ def registry() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]],
         textstats,
     )
     from mit_6_5840_mapreduce_spark.streaming import jobs as streaming_jobs
-    from types import SimpleNamespace
-    streaming_late = SimpleNamespace(QUERIES=streaming_jobs.LATE_QUERIES,
-                                     ORACLES=streaming_jobs.LATE_ORACLES)
-    multimodal_late = SimpleNamespace(QUERIES=multimodal.LATE_QUERIES,
-                                      ORACLES=multimodal.LATE_ORACLES)
     modules = (mrqueries, dedup, similarity, textstats, scrub, formats,
-               multimodal, streaming_jobs, events, corpus, streaming_late,
-               multimodal_late, relational, mixture, bpe, quality, epoch)
+               multimodal, streaming_jobs, events, corpus, relational,
+               mixture, bpe, quality, epoch)
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
     for m in modules:

@@ -398,15 +398,6 @@ def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean_amp DOUBLE, rms DOUBLE")
 
 
-QUERIES = {
-    "multimodal_meta": multimodal_meta,
-    "image_decode_stats": image_decode_stats,
-    "frame_sample": frame_sample,
-    "media_features": media_features,
-    "payload_thumbnail": payload_thumbnail,
-    "media_decode_stats": media_decode_stats,
-}
-
 GIF_W = 16
 
 
@@ -572,15 +563,20 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", "phash"))
 
 
-# registered after the driver window (operators/__init__.py LATE list):
-# keeps the five required multimodal gates in their slots
-LATE_QUERIES = {
+QUERIES = {
+    "multimodal_meta": multimodal_meta,
+    "image_decode_stats": image_decode_stats,
+    "frame_sample": frame_sample,
+    "media_features": media_features,
+    "payload_thumbnail": payload_thumbnail,
+    "media_decode_stats": media_decode_stats,
     "audio_decode_stats": audio_decode_stats,
     "gif_decode_stats": gif_decode_stats,
     "video_frame_stats": video_frame_stats,
     "image_phash": image_phash,
     "image_phash_neardup": image_phash_neardup,
 }
+
 
 # decode(encode_bmp(x)) == x, so every feature is a function of the raw
 # payload byte stream — recomputed here on the hex expansion of the same
@@ -826,24 +822,6 @@ _PHASH_COMMON = f"""
         )
 """
 
-LATE_ORACLES = {
-    "audio_decode_stats": _AUDIO_STATS_ORACLE,
-    "gif_decode_stats": _GIF_STATS_ORACLE,
-    "video_frame_stats": _VIDEO_STATS_ORACLE,
-    "image_phash": f"""
-        WITH {_PHASH_COMMON},
-        npx AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pixels
-                FROM px GROUP BY doc_id)
-        SELECT doc_id, n_pixels, phash
-        FROM npx JOIN ph USING (doc_id)
-    """,
-    "image_phash_neardup": f"""
-        WITH {_PHASH_COMMON}
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.phash
-        FROM ph a JOIN ph b
-            ON a.phash = b.phash AND a.doc_id < b.doc_id
-    """,
-}
 
 def _le32(expr: str) -> str:
     """Little-endian u32 rendered as 8 uppercase hex chars (the wire
@@ -1030,5 +1008,21 @@ ORACLES = {
         FROM documents
         CROSS JOIN (SELECT unnest(range(0, {N_FRAMES})) AS i)
         WHERE (octet_length(encode(text)) // {VID_FRAME_BYTES}) > i
+    """,
+    "audio_decode_stats": _AUDIO_STATS_ORACLE,
+    "gif_decode_stats": _GIF_STATS_ORACLE,
+    "video_frame_stats": _VIDEO_STATS_ORACLE,
+    "image_phash": f"""
+        WITH {_PHASH_COMMON},
+        npx AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pixels
+                FROM px GROUP BY doc_id)
+        SELECT doc_id, n_pixels, phash
+        FROM npx JOIN ph USING (doc_id)
+    """,
+    "image_phash_neardup": f"""
+        WITH {_PHASH_COMMON}
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.phash
+        FROM ph a JOIN ph b
+            ON a.phash = b.phash AND a.doc_id < b.doc_id
     """,
 }

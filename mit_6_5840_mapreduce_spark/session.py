@@ -91,6 +91,9 @@ def get_spark(app_name: str = "mit-6-5840-mapreduce-spark",
         # execution absent failures (SURVEY.md section 2.5.2)
         .config("spark.speculation", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # the console progress bar interleaves \r-redrawn lines with
+        # stdout (it mangles tools/parity.py's per-query OK lines)
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

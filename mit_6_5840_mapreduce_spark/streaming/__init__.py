@@ -4,6 +4,7 @@ from mit_6_5840_mapreduce_spark.streaming.jobs import (  # noqa: F401
     read_events_stream,
     run_stream_to_memory,
     sessionized_stream,
+    stream_shuffle_partitions,
     user_running_totals_stream,
     windowed_counts_stream,
 )

@@ -34,6 +34,7 @@ the TWS API is mechanical once protobuf exists.
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Iterable
 
@@ -41,6 +42,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType, StructField, StructType, TimestampType,
@@ -273,24 +275,6 @@ def click_purchase_attribution_batch(spark: SparkSession,
              "purchase_ts", "click_id", "click_ts", "purchase_value")
 
 
-def _await_or_fail(q, timeout_sec: int, what: str) -> None:
-    """availableNow queries must FINISH inside the timeout: a silent
-    timeout would hand back a partial sink (and leave the query running
-    against a scratch dir a later scratch_dir() call would rmtree).
-    The stop is bounded (spark.sql.streaming.stopTimeout, session.py —
-    the default 0 waits forever on a wedged micro-batch) and
-    best-effort: the timeout is the error to surface, never a stop
-    failure."""
-    if not q.awaitTermination(timeout_sec):
-        try:
-            q.stop()
-        except Exception:
-            pass
-        raise RuntimeError(
-            f"{what}: availableNow query did not terminate within "
-            f"{timeout_sec}s")
-
-
 # ---- Scale-adaptive streaming state partitioning (r14) -------------------
 # A stateful streaming query pins spark.sql.shuffle.partitions at first
 # start as its STATE partition count, and streaming is exempt from AQE
@@ -309,6 +293,7 @@ def _await_or_fail(q, timeout_sec: int, what: str) -> None:
 
 STREAM_PART_TARGET_BYTES = 32 << 20
 STREAM_PARTS_PER_CORE = 4
+STREAM_TIMEOUT_SEC = 120
 
 
 def stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
@@ -328,46 +313,58 @@ def stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     return max(2, min(cap, -(-size // STREAM_PART_TARGET_BYTES)))
 
 
-class _stream_partitioning:
-    """Context manager: pin spark.sql.shuffle.partitions for queries
-    STARTED inside (a streaming query captures the value at start), then
-    restore the session value for everything after. No-op when ``n`` is
-    None (direct runner callers keep session behavior)."""
+def _drain(spark: SparkSession, writer: DataStreamWriter, n_parts: int,
+           what: str) -> None:
+    """Run ``writer`` availableNow (consume all input, then stop) with
+    spark.sql.shuffle.partitions pinned to ``n_parts``, restoring the
+    session value afterwards. The pin spans start AND await: the query
+    captures it at start as its state partition count, and foreachBatch
+    bodies (the CDC merge) plan their batch joins under it.
 
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark, self.n = spark, n
+    The query must FINISH inside STREAM_TIMEOUT_SEC: a silent timeout
+    would hand back a partial sink (and leave the query running against
+    a scratch dir a later scratch_dir() call would rmtree). The stop is
+    bounded (spark.sql.streaming.stopTimeout, session.py — the default 0
+    waits forever on a wedged micro-batch) and best-effort: the timeout
+    is the error to surface, never a stop failure."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    try:
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(STREAM_TIMEOUT_SEC):
+            try:
+                q.stop()
+            except Exception:
+                pass
+            raise RuntimeError(
+                f"{what}: availableNow query did not terminate within "
+                f"{STREAM_TIMEOUT_SEC}s")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
-    def __enter__(self):
-        if self.n is not None:
-            self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
 
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+def _read_sink(spark: SparkSession, out_dir: str, schema: str) -> DataFrame:
+    """Read a foreachBatch parquet sink back as ``schema``'s columns, or
+    an empty frame of ``schema`` when no batch committed (an empty
+    stream never calls the batch function)."""
+    if not glob.glob(os.path.join(out_dir, "*.parquet")):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(out_dir).select(
+        StructType.fromDDL(schema).fieldNames())
 
 
 def run_stream_to_memory(spark: SparkSession, df: DataFrame, name: str,
-                         output_mode: str = "complete",
-                         timeout_sec: int = 120,
-                         shuffle_partitions: int | None = None) -> DataFrame:
+                         n_parts: int,
+                         output_mode: str = "complete") -> DataFrame:
     """Execute a streaming DataFrame with an availableNow trigger into a
     memory sink; returns the materialized result table."""
-    with _stream_partitioning(spark, shuffle_partitions):
-        q = (
-            df.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_fail(q, timeout_sec, f"stream->memory[{name}]")
+    _drain(spark, df.writeStream.format("memory").queryName(name)
+           .outputMode(output_mode), n_parts, f"stream->memory[{name}]")
     return spark.table(name)
 
 
 def run_stream_to_parquet(spark: SparkSession, df: DataFrame, out_dir: str,
-                          timeout_sec: int = 120,
-                          shuffle_partitions: int | None = None) -> None:
+                          n_parts: int) -> None:
     """Execute a streaming DataFrame availableNow through foreachBatch
     into parquet — the pattern for sinks Structured Streaming doesn't
     ship natively (upserts, JDBC, multi-table writes): each micro-batch
@@ -381,13 +378,8 @@ def run_stream_to_parquet(spark: SparkSession, df: DataFrame, out_dir: str,
         (batch_df.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    with _stream_partitioning(spark, shuffle_partitions):
-        q = (
-            df.writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_fail(q, timeout_sec, "stream->parquet")
+    _drain(spark, df.writeStream.foreachBatch(write_batch), n_parts,
+           "stream->parquet")
 
 
 # ---- Driver-gate surface --------------------------------------------------
@@ -407,13 +399,13 @@ def _memq(prefix: str) -> str:
 def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark, windowed_counts_stream(spark, sf_dir), _memq("hourly"),
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark, sliding_counts_stream(spark, sf_dir), _memq("sliding"),
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,14 +430,14 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark, _dedup_within_watermark(stream), _memq("dedup"),
         output_mode="append",
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = run_stream_to_memory(
         spark, user_running_totals_stream(spark, sf_dir), _memq("totals"),
         output_mode="update",
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
     # update mode emits one row per user per micro-batch; keep the FINAL
     # state row. n_events strictly increases across a user's emissions
     # (the operator is only invoked for keys with >= 1 row in the
@@ -469,7 +461,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags gap > 30 min) differs only on exact-boundary gaps."""
     return run_stream_to_memory(
         spark, sessionized_stream(spark, sf_dir), _memq("sess"),
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,7 +471,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark, click_purchase_attribution_stream(spark, sf_dir),
         _memq("attr"), output_mode="append",
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,7 +494,7 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return run_stream_to_memory(
         spark, agg, _memq("enriched"),
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def stream_foreachbatch_roundtrip(spark: SparkSession,
@@ -512,24 +504,18 @@ def stream_foreachbatch_roundtrip(spark: SparkSession,
     (the pattern for sinks Structured Streaming doesn't ship natively)
     and read the committed files back — the gate result only matches
     the batch oracle if the sink wrote exactly the finalized rows."""
-    import glob
-
     from mit_6_5840_mapreduce_spark.sources.scratch import scratch_dir
     out = os.path.join(scratch_dir("stream_fb"), "hourly")
     run_stream_to_parquet(spark, windowed_counts_stream(spark, sf_dir),
-                          out,
-                          shuffle_partitions=stream_shuffle_partitions(
-                              spark, sf_dir))
-    if not glob.glob(os.path.join(out, "*.parquet")):
-        # empty stream -> foreachBatch never wrote a commit
-        return spark.createDataFrame(
-            [], "hour TIMESTAMP, event_type STRING, n_events BIGINT, "
-                "sum_value DOUBLE")
-    return (spark.read.parquet(out)
-            .select("hour", "event_type", "n_events", "sum_value"))
+                          out, stream_shuffle_partitions(spark, sf_dir))
+    return _read_sink(
+        spark, out, "hour TIMESTAMP, event_type STRING, n_events BIGINT, "
+                    "sum_value DOUBLE")
 
 
 STREAM_TOPK = 3
+_TOPK_OUT = ("hour TIMESTAMP, event_type STRING, n_events BIGINT, "
+             "rank INT")
 
 
 def stream_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,19 +537,15 @@ def stream_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_stream_state.py."""
     agg = windowed_counts_stream(spark, sf_dir) \
         .select("hour", "event_type", "n_events")
-    return run_topk_stream(
-        spark, agg,
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+    return run_topk_stream(spark, agg,
+                           stream_shuffle_partitions(spark, sf_dir))
 
 
 def run_topk_stream(spark: SparkSession, hourly: DataFrame,
-                    timeout_sec: int = 120,
-                    shuffle_partitions: int | None = None) -> DataFrame:
+                    n_parts: int) -> DataFrame:
     """Execute the append-mode hourly aggregate through the ranking
     foreachBatch sink and read the committed top-k back (shared by the
     gate query and the multi-micro-batch test)."""
-    import glob
-
     from pyspark.sql.window import Window as W
 
     from mit_6_5840_mapreduce_spark.sources.scratch import scratch_dir
@@ -577,24 +559,11 @@ def run_topk_stream(spark: SparkSession, hourly: DataFrame,
          .select("hour", "event_type", "n_events", "rank")
          .write.mode("append").parquet(out))
 
-    with _stream_partitioning(spark, shuffle_partitions):
-        q = (
-            hourly.writeStream.foreachBatch(write_topk)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_fail(q, timeout_sec, "stream_topk")
-    if not glob.glob(os.path.join(out, "*.parquet")):
-        return spark.createDataFrame(
-            [], "hour TIMESTAMP, event_type STRING, n_events BIGINT, "
-                "rank INT")
-    return (spark.read.parquet(out)
-            .select("hour", "event_type", "n_events", "rank"))
+    _drain(spark, hourly.writeStream.foreachBatch(write_topk)
+           .outputMode("append"), n_parts, "stream_topk")
+    return _read_sink(spark, out, _TOPK_OUT)
 
 
-_TOPK_OUT = ("hour TIMESTAMP, event_type STRING, n_events BIGINT, "
-             "rank INT")
 _TOPK_STATE = "types ARRAY<STRING>, counts ARRAY<LONG>"
 
 
@@ -673,14 +642,11 @@ def stream_topk_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(
         spark, topk_stateful_from_events(read_events_stream(spark, sf_dir)),
         _memq("topkstate"), output_mode="append",
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        n_parts=stream_shuffle_partitions(spark, sf_dir))
 
 
 def run_cdc_upsert_stream(spark: SparkSession, changelog: DataFrame,
-                          customer: DataFrame,
-                          timeout_sec: int = 120,
-                          shuffle_partitions: int | None = None
-                          ) -> DataFrame:
+                          customer: DataFrame, n_parts: int) -> DataFrame:
     """Execute a CDC changelog stream through a VERSIONED-SNAPSHOT
     foreachBatch merge (shared by the gate query and the multi-batch
     test). Batch N reads snapshot v{N} and writes v{N+1}, so a retried
@@ -702,8 +668,6 @@ def run_cdc_upsert_stream(spark: SparkSession, changelog: DataFrame,
     against the snapshot — the same plan shape as the batch
     ``cdc_apply``, applied incrementally.
     """
-    import glob
-
     from mit_6_5840_mapreduce_spark.sources.scratch import scratch_dir
     root = scratch_dir("stream_cdc")
     base = customer.select(
@@ -766,13 +730,8 @@ def run_cdc_upsert_stream(spark: SparkSession, changelog: DataFrame,
         merged.write.mode("overwrite").parquet(
             os.path.join(root, f"v{batch_id + 1}"))
 
-    with _stream_partitioning(spark, shuffle_partitions):
-        q = (
-            changelog.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_fail(q, timeout_sec, "stream_cdc_upsert")
+    _drain(spark, changelog.writeStream.foreachBatch(merge_batch), n_parts,
+           "stream_cdc_upsert")
     versions = sorted(
         int(os.path.basename(p)[1:])
         for p in glob.glob(os.path.join(root, "v*")))
@@ -799,7 +758,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_cdc_upsert_stream(
         spark, read_events_stream(spark, sf_dir),
         load_table(spark, sf_dir, "customer"),
-        shuffle_partitions=stream_shuffle_partitions(spark, sf_dir))
+        stream_shuffle_partitions(spark, sf_dir))
 
 
 QUERIES = {
@@ -811,14 +770,6 @@ QUERIES = {
     "stream_foreachbatch_roundtrip": stream_foreachbatch_roundtrip,
     "stream_topk_event_types": stream_topk_event_types,
     "stream_topk_stateful": stream_topk_stateful,
-}
-
-# Historical split: these registered late so they could not displace
-# the four required gates above from the round-3 window. Since the
-# explicit WINDOW_FIRST list (operators/__init__.py) took over window
-# composition, module placement no longer matters — the steady-state
-# rotation pulls any of them in-window when their certs go stale.
-LATE_QUERIES = {
     "stream_sessionize": stream_sessionize,
     "stream_attribution": stream_attribution,
     "stream_cdc_upsert": stream_cdc_upsert,
@@ -902,16 +853,6 @@ ORACLES = {
         )
         WHERE rank <= {STREAM_TOPK}
     """,
-}
-
-# the custom-stateful twin emits at the same finalization instant
-# (event-time timeout at window end == append-mode watermark rule) with
-# the same deterministic rank, so the two forms share one oracle — any
-# divergence between built-in finalization and the manual eviction
-# fails the gate
-ORACLES["stream_topk_stateful"] = ORACLES["stream_topk_event_types"]
-
-LATE_ORACLES = {
     # gap >= 30 min starts a new session (session_window's half-open
     # boundary; see stream_sessionize docstring)
     "stream_sessionize": f"""
@@ -956,10 +897,17 @@ LATE_ORACLES = {
     """,
 }
 
+# the custom-stateful twin emits at the same finalization instant
+# (event-time timeout at window end == append-mode watermark rule) with
+# the same deterministic rank, so the two forms share one oracle — any
+# divergence between built-in finalization and the manual eviction
+# fails the gate
+ORACLES["stream_topk_stateful"] = ORACLES["stream_topk_event_types"]
+
 # the incremental foreachBatch merge must converge to exactly the batch
 # MERGE result, so the streaming form shares cdc_apply's oracle
 from mit_6_5840_mapreduce_spark.operators.events import (  # noqa: E402
     ORACLES as _EVENT_ORACLES,
 )
 
-LATE_ORACLES["stream_cdc_upsert"] = _EVENT_ORACLES["cdc_apply"]
+ORACLES["stream_cdc_upsert"] = _EVENT_ORACLES["cdc_apply"]

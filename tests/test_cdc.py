@@ -108,7 +108,7 @@ def test_stream_cdc_upsert_multi_batch_order_independent(
         .option("maxFilesPerTrigger", "1").parquet(src),
         target="timestamp")
     got = run_cdc_upsert_stream(
-        spark, changelog, load_table(spark, d, "customer"))
+        spark, changelog, load_table(spark, d, "customer"), 2)
     rows = {r.c_custkey: r for r in got.collect()}
     assert set(rows) == {0, 2, 3, 5}
     assert (rows[0].cdc_op, rows[0].acctbal, rows[0].mktsegment) == (
@@ -178,7 +178,7 @@ def test_stream_cdc_full_sequence_tie_matches_batch_ordering(
         .option("latestFirst", "false").parquet(src),
         target="timestamp")
     got = run_cdc_upsert_stream(
-        spark, changelog, load_table(spark, d, "customer"))
+        spark, changelog, load_table(spark, d, "customer"), 2)
     rows = {r.c_custkey: r for r in got.collect()}
     assert 0 not in rows            # the delete won the sequence tie
     assert rows[2].cdc_op == "keep" and rows[3].cdc_op == "keep"

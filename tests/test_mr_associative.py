@@ -41,3 +41,17 @@ def test_single_occurrence_keys_skip_combine(spark):
 def test_mr_run_requires_some_reducer(spark):
     with pytest.raises(ValueError, match="reducef or combinef"):
         mr_run(spark, APPS["wc"][0], None, [("d", "x")])
+
+
+@pytest.mark.parametrize("path", ["groupbykey", "associative"])
+def test_one_shuffle_per_job(spark, documents, path):
+    """The reduce output keeps the ihash partitioner the shuffle set, so
+    the output-order step sorts within partitions and never shuffles a
+    second time: exactly one ShuffledRDD in the lineage on both paths."""
+    mapf, reducef = APPS["wc"]
+    combinef, finalizef = APPS_ASSOCIATIVE["wc"]
+    out = (mr_run(spark, mapf, reducef, documents, n_reduce=4)
+           if path == "groupbykey" else
+           mr_run(spark, mapf, None, documents, n_reduce=4,
+                  combinef=combinef, finalizef=finalizef))
+    assert out.toDebugString().decode().count("ShuffledRDD") == 1

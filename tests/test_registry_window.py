@@ -1,23 +1,12 @@
 """Pin the registry's first-50 window composition.
 
-The driver's CORRECTNESS gate verifies only the FIRST 50 registry
-entries per round, rotated under the steady-state policy (VERDICT r5
-item 4): sentinels every round, every round-changed and newly
-registered query, and all remaining slots filled from
-tools/window_plan.py's staleness report, oldest cert round first with
-name tiebreak. Round 13 (NO new registrations): epoch_assembly and
-the five span-family queries rotate as round-changed (the epoch
-capstone composes the single-sourced pack_assignment /
-shuffle_assignment rules — VERDICT r12 item 3; the span memo's
-eviction is now LRU and the corpus stamp is re-read under the insert
-lock — ADVICE r12; values unchanged by design); the 21-name r8 tail
-lands on schedule (VERDICT r12 item 1 — pack_sequences and
-training_shuffle in it are also round-changed by the single-sourcing
-refactor), and the first 19 of the 42-name r9 cohort fill the rest,
-with the 23-name r9 tail scheduled for r14 inside the 5-round
-ceiling. Docstring/comment-only edits do NOT re-certify: no plan or
-value surface moves. This test fails loudly if a future registration
-reorders the window.
+The external CORRECTNESS gate verifies only the FIRST 50 registry
+entries per round. Policy: the four sentinels every round; then every
+query whose plan, values or oracle changed since its last
+certification; then the stalest certs from tools/window_plan.py,
+oldest round first with name tiebreak. Docstring/comment-only edits do
+NOT re-certify. This test fails loudly if a registration reorders the
+window.
 """
 
 from __future__ import annotations
@@ -29,51 +18,42 @@ from mit_6_5840_mapreduce_spark.operators import (
 # regression sentinels: in-window EVERY round
 SENTINELS = {"mr_wc", "mr_wc_rdd", "dedup_exact", "stream_hourly_counts"}
 
-# changed in round 13: the epoch capstone's pack/shuffle stages now
-# render through the shared single-sourced rules (engine AND oracle),
-# and every span-family query consumes the ADVICE-r12-hardened memo
-# (LRU eviction; inserts keyed by the PRE-build corpus stamp, so a
-# frame built over a mid-rewrite corpus is unreachable by fresh-stamp
-# callers and evicted by the next insert sweep)
-CHANGED_THIS_ROUND = {
-    "epoch_assembly",
-    "dedup_span_pairs", "dedup_span_scrub", "duplicate_spans",
-    "contamination_spans", "decontaminate_span_scrub",
+# changed since their last certification: the streams (one availableNow
+# runner), the RDD MapReduce jobs (one shuffle instead of two) and the
+# scrub_positions consumers (bigint position mask)
+CHANGED = {
+    "stream_sliding_counts", "stream_dedup_events", "stream_user_totals",
+    "stream_enriched_events", "stream_foreachbatch_roundtrip",
+    "stream_topk_event_types", "stream_topk_stateful",
+    "stream_sessionize", "stream_attribution", "stream_cdc_upsert",
+    "mr_wc_assoc", "mr_indexer_rdd",
+    "dedup_span_scrub", "decontaminate_span_scrub", "epoch_assembly",
 }
 
-# staleness rotation part 1 (window_plan.py, ceiling 5 rounds): the
-# ENTIRE 21-name r8 tail — on schedule per the r12 window-plan draft
-# (VERDICT r12 item 1); pack_sequences/training_shuffle double as
-# round-changed (the single-sourcing refactor)
-STALE_R8_TAIL = {
-    "pack_sequences", "part_name_analysis", "priority_status_cube",
-    "q16_parts_supplier_relationship", "q4_order_priority",
-    "repeat_customers", "sales_rollup", "sessionize",
-    "shingle_containment", "shingle_containment_capped",
-    "skewsafe_type_user_counts", "stream_foreachbatch_roundtrip",
-    "stream_topk_event_types", "table_profile", "training_shuffle",
-    "user_event_pivot", "user_event_sequences",
-    "user_event_sequences_capped", "user_type_count_map",
-    "user_value_mad", "user_value_trend",
+# staleness rotation: the r9 certs not already changed above ...
+STALE_R9 = {
+    "image_phash", "image_phash_neardup", "ivfpq_search",
+    "media_features", "mr_indexer", "mv_incremental_refresh",
+    "pq_encode", "pq_search", "q11_important_stock",
+    "q9_product_type_profit", "quality_ensemble", "similarity_triangles",
+    "skyline_pareto", "source_mix_weights", "table_diff",
+    "temperature_resample", "user_event_unpivot",
+    "user_growth_accounting", "user_scd2", "user_value_outliers",
+    "zorder_layout_stats",
 }
 
-# staleness rotation part 2: the r9 cohort's first 19 names in name
-# order; the 23-name tail is the planner-scheduled spill to r14
-STALE_R9_HEAD = {
-    "ann_recall_eval", "asof_join_orders", "audio_decode_stats",
-    "bloom_prune_join", "bucketed_join_stats", "cdc_apply",
-    "curation_summary", "customer_rfm", "customer_value_quartiles",
-    "data_quality_audit", "dedup_eval", "dedup_incremental",
-    "dedup_index_build", "doc_bfs", "doc_lm_score",
-    "embedding_neardup", "funnel_windowed", "heavy_hitters_cms",
-    "heavy_hitters_cms_direct",
+# ... then the first r10 certs in name order
+STALE_R10_HEAD = {
+    "dedup_fuzzy_verify", "dedup_groups", "dedup_groups_capped",
+    "dedup_keep_best", "dedup_keep_best_capped", "dedup_minhash_lsh",
+    "dedup_minhash_lsh_capped", "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_capped", "dedup_simhash",
 }
 
-MUST_BE_IN_WINDOW = (SENTINELS | CHANGED_THIS_ROUND
-                     | STALE_R8_TAIL | STALE_R9_HEAD)
+MUST_BE_IN_WINDOW = SENTINELS | CHANGED | STALE_R9 | STALE_R10_HEAD
 
 
-def test_first_window_contains_round13_surface():
+def test_first_window_contains_the_must_list():
     queries, _ = registry()
     window = list(queries)[:WINDOW_SIZE]
     missing = MUST_BE_IN_WINDOW - set(window)
@@ -81,7 +61,7 @@ def test_first_window_contains_round13_surface():
 
 
 def test_window_is_exactly_the_must_list():
-    # 4 + 6 + 21 + 19 = 50: the round-13 window has no free slots
+    # 4 + 15 + 21 + 10 = 50: no free slots
     assert len(MUST_BE_IN_WINDOW) == WINDOW_SIZE
 
 

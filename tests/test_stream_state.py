@@ -121,7 +121,7 @@ def test_stream_topk_multibatch_matches_batch_rank(spark, split_src):
     )
     hourly = windowed_counts_from_events(stream) \
         .select("hour", "event_type", "n_events")
-    got = {tuple(r) for r in run_topk_stream(spark, hourly).collect()}
+    got = {tuple(r) for r in run_topk_stream(spark, hourly, 2).collect()}
 
     ev = spark.read.parquet(src_dir).withColumn(
         "ts", F.col("ts").cast("timestamp"))
@@ -199,10 +199,10 @@ def test_stateful_topk_matches_append_on_watermark_equality(
                 .withColumn("ts", F.col("ts").cast("timestamp")))
 
     got_append = {(r.hour, r.event_type) for r in run_stream_to_memory(
-        spark, windowed_counts_from_events(stream()), "wm_eq_append",
+        spark, windowed_counts_from_events(stream()), "wm_eq_append", 2,
         output_mode="append").collect()}
     got_state = {(r.hour, r.event_type) for r in run_stream_to_memory(
-        spark, topk_stateful_from_events(stream()), "wm_eq_state",
+        spark, topk_stateful_from_events(stream()), "wm_eq_state", 2,
         output_mode="append").collect()}
     assert got_append == got_state
     assert (datetime.datetime(2024, 1, 1, 10, 0), "a") in got_state
@@ -251,11 +251,11 @@ def test_topk_forms_agree_across_window_edge_sweep(spark, tmp_path,
 
     got_append = {(r.hour, r.event_type) for r in run_stream_to_memory(
         spark, windowed_counts_from_events(stream()),
-        f"edge_sweep_append_{tag}",
+        f"edge_sweep_append_{tag}", 2,
         output_mode="append").collect()}
     got_state = {(r.hour, r.event_type) for r in run_stream_to_memory(
         spark, topk_stateful_from_events(stream()),
-        f"edge_sweep_state_{tag}",
+        f"edge_sweep_state_{tag}", 2,
         output_mode="append").collect()}
     assert got_append == got_state, (
         f"forms diverge at offset {offset_ms} ms")

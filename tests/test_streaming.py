@@ -3,19 +3,27 @@ run over the full events file must reproduce the batch query results."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from mit_6_5840_mapreduce_spark.operators.events import (
     events_hourly, sessionize, user_stats,
 )
 from mit_6_5840_mapreduce_spark.streaming.jobs import (
+    STREAM_PART_TARGET_BYTES,
+    STREAM_PARTS_PER_CORE,
     click_purchase_attribution_batch,
     click_purchase_attribution_stream,
+    read_events_stream,
     run_stream_to_memory,
     sessionized_stream,
+    stream_shuffle_partitions,
     user_running_totals_stream,
+    windowed_counts_from_events,
     windowed_counts_stream,
 )
 
@@ -26,7 +34,8 @@ def _rows(df, cols):
 
 def test_windowed_counts_match_batch(spark, sf_dir):
     got = run_stream_to_memory(
-        spark, windowed_counts_stream(spark, sf_dir), "win_counts")
+        spark, windowed_counts_stream(spark, sf_dir), "win_counts",
+        stream_shuffle_partitions(spark, sf_dir))
     want = events_hourly(spark, sf_dir).select(
         "hour", "event_type", "n_events", "sum_value")
     cols = ["hour", "event_type", "n_events", "sum_value"]
@@ -35,7 +44,8 @@ def test_windowed_counts_match_batch(spark, sf_dir):
 
 def test_sessionized_stream_matches_batch(spark, sf_dir):
     got = run_stream_to_memory(
-        spark, sessionized_stream(spark, sf_dir), "sessions")
+        spark, sessionized_stream(spark, sf_dir), "sessions",
+        stream_shuffle_partitions(spark, sf_dir))
     want = sessionize(spark, sf_dir).select(
         "user_id", "session_start", "session_end", "n_events", "sum_value")
     cols = ["user_id", "session_start", "session_end",
@@ -46,7 +56,8 @@ def test_sessionized_stream_matches_batch(spark, sf_dir):
 def test_stream_stream_attribution_matches_batch(spark, sf_dir):
     got = run_stream_to_memory(
         spark, click_purchase_attribution_stream(spark, sf_dir),
-        "attribution", output_mode="append")
+        "attribution", stream_shuffle_partitions(spark, sf_dir),
+        output_mode="append")
     want = click_purchase_attribution_batch(spark, sf_dir)
     cols = ["purchase_id", "user_id", "click_id"]
     assert _rows(got, cols) == _rows(want, cols)
@@ -58,7 +69,7 @@ def test_user_running_totals_final_state(spark, sf_dir):
     the batch per-user totals (cents-exact)."""
     got = run_stream_to_memory(
         spark, user_running_totals_stream(spark, sf_dir), "totals",
-        output_mode="update")
+        stream_shuffle_partitions(spark, sf_dir), output_mode="update")
     # update mode may emit one row per micro-batch per user; take the last
     # (availableNow on a single file -> single batch, but don't assume)
     final = (
@@ -80,7 +91,7 @@ def test_stream_dedup_matches_batch_distinct(spark, sf_dir):
     from mit_6_5840_mapreduce_spark.sources.tables import load_table
     got = run_stream_to_memory(
         spark, deduped_events_stream(spark, sf_dir), "dedup_stream",
-        output_mode="append")
+        stream_shuffle_partitions(spark, sf_dir), output_mode="append")
     want = load_table(spark, sf_dir, "events").dropDuplicates(["event_id"])
     assert got.count() == want.count()
     assert _rows(got, ["event_id"]) == _rows(
@@ -96,7 +107,7 @@ def test_stream_dedup_drops_actual_duplicates(spark, sf_dir):
     ev = read_events_stream(spark, sf_dir)
     got = run_stream_to_memory(
         spark, _dedup_within_watermark(ev.unionAll(ev)), "dedup_union",
-        output_mode="append")
+        stream_shuffle_partitions(spark, sf_dir), output_mode="append")
     n_ids = got.select("event_id").distinct().count()
     assert got.count() == n_ids
 
@@ -110,7 +121,8 @@ def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path):
     from mit_6_5840_mapreduce_spark.sources.tables import load_table
     out = str(tmp_path / "events_sink")
     ev = read_events_stream(spark, sf_dir).select("event_id", "user_id")
-    run_stream_to_parquet(spark, ev, out)
+    run_stream_to_parquet(spark, ev, out,
+                          stream_shuffle_partitions(spark, sf_dir))
     got = spark.read.parquet(out)
     want = load_table(spark, sf_dir, "events")
     assert got.count() == want.count()
@@ -218,3 +230,48 @@ def test_stream_failure_injection_exactly_once(spark, sf_dir, tmp_path):
     got = sorted(map(tuple, spark.read.parquet(out_f).collect()))
     want = sorted(map(tuple, spark.read.parquet(out_c).collect()))
     assert got == want and len(got) > 0
+
+
+def test_runner_restores_session_shuffle_partitions(spark, sf_dir):
+    """The runner pins spark.sql.shuffle.partitions only while its query
+    runs: the session value comes back after a finished stream and after
+    a failing one."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "3"
+    ev = read_events_stream(spark, sf_dir)
+    got = run_stream_to_memory(
+        spark, windowed_counts_from_events(ev), "pin_ok", 3)
+    assert got.count() > 0
+    assert spark.conf.get(key) == before
+
+    bad = ev.select(F.raise_error(F.lit("injected stream failure"))
+                    .cast("string").alias("x"))
+    with pytest.raises(StreamingQueryException,
+                       match="injected stream failure"):
+        run_stream_to_memory(spark, bad, "pin_fail", 3,
+                             output_mode="append")
+    assert spark.conf.get(key) == before
+
+
+def test_stream_partitions_floor_and_cap(spark, sf_dir, tmp_path):
+    """One state partition per STREAM_PART_TARGET_BYTES of events input,
+    floored at 2 and capped at STREAM_PARTS_PER_CORE x cores. Sizes come
+    from the file system, so sparse files stand in for large inputs."""
+    assert (os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+            < STREAM_PART_TARGET_BYTES)
+    assert stream_shuffle_partitions(spark, sf_dir) == 2
+
+    def sized(name: str, size: int) -> str:
+        d = tmp_path / name
+        d.mkdir()
+        with open(d / "events.parquet", "wb"):
+            pass
+        os.truncate(d / "events.parquet", size)
+        return str(d)
+
+    assert stream_shuffle_partitions(
+        spark, sized("mid", 3 * STREAM_PART_TARGET_BYTES + 1)) == 4
+    cap = STREAM_PARTS_PER_CORE * spark.sparkContext.defaultParallelism
+    assert stream_shuffle_partitions(
+        spark, sized("big", 1 << 36)) == cap
