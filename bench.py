@@ -11,19 +11,25 @@ and published as the median of REPEAT runs. The notes carry per-query
 ratios against the frozen baselines (BASELINE.md / BENCH_r01.json):
 uniform ratio inflation = host load; one query moving alone = that
 query regressed. Diagnostic detail goes to a sidecar file
-($SPARK_GRAFT_BENCH_DETAIL, default /tmp/bench_detail.json).
+($SPARK_GRAFT_BENCH_DETAIL, default /tmp/bench_detail.json): each
+query's [min, median, max], the baseline ratios, the pure-Python codec
+throughput ceiling and the media share the codec swap-rule guard
+checks. Nothing else runs.
 
 This line is a single wall-clock reading, not a gain claim. Gains are
 claimed with the paired benchmark, which runs seeded inputs, checks
 every output against the DuckDB oracle and records per-layer traces:
 ``python3 perfbench/run.py --workload all --seed N``.
 
-Two headline generations (r11, VERDICT r10 item 3): the r1 set keeps
-its frozen BASELINE_R1 contract for cross-round comparability, and
-HEADLINE_V2 covers the post-r1 heavy operators (span scrub, capped
-dedup compositions, stream-stream join, BPE training) against a
-baseline frozen in r11 — both blocks run in every sweep and each
-carries its own ratio block in the notes.
+Two headline generations: the r1 set keeps its frozen BASELINE_R1
+contract for cross-round comparability, and HEADLINE_V2 covers the
+later heavy operators (span scrub, capped dedup compositions,
+stream-stream join, BPE training) against its own frozen baseline.
+Both blocks run in every sweep and each carries its own ratio block in
+the notes.
+
+The single-query timing protocol (warm_up, time_query, sweep) lives
+here and nowhere else; ``tools/profile_query.py`` calls it.
 """
 
 from __future__ import annotations
@@ -83,12 +89,10 @@ BASELINE_R1 = {
     "tfidf_top_terms": 1.132, "q7_nation_volume": 0.99,
 }
 
-# v2 headline set (VERDICT r10 item 3): the post-r1 HEAVY operators the
-# r1 contract can't see — a 2x regression in any of these was
-# previously invisible to the gate (they were timed once in the EXTRA
-# sidecar, no baseline). Runs inside the same sweep; tracked as a
-# SEPARATE ratio block (ratio_median_v2) so the r1 cross-round contract
-# stays comparable.
+# v2 headline set: the heavy operators the r1 contract can't see, so a
+# 2x regression in any of them reaches the gate. Runs inside the same
+# sweep; tracked as a SEPARATE ratio block (ratio_median_v2) so the r1
+# cross-round contract stays comparable.
 HEADLINE_V2 = (
     "dedup_span_scrub",         # span-family cut stage (2 window passes)
     "semantic_dedup_capped",    # LSH -> CC -> medoid composition
@@ -116,11 +120,19 @@ REPEAT = 3
 CONTRACT_LINE_MAX = 4000
 
 
+def warm_up(spark, queries, sf_dir: str) -> None:
+    """JVM/codegen warm-up so the first measured query isn't paying JIT
+    cost (a NON-headline query, so no measured entry gets extra
+    warming)."""
+    queries["q4_order_priority"](spark, sf_dir).write.mode(
+        "overwrite").format("noop").save()
+
+
 def time_query(spark, queries, name: str, sf_dir: str) -> float:
-    """THE single-query timing protocol, rendered once (the sweep, the
-    extra sidecar and the codec ceiling all share it): clear cached
-    frames (ops may persist internally), force full physical execution
-    through the noop sink, return seconds (unrounded; callers round)."""
+    """THE single-query timing protocol (the sweep and the codec ceiling
+    share it): clear cached frames (ops may persist internally), force
+    full physical execution through the noop sink, return seconds
+    (unrounded; callers round)."""
     spark.catalog.clearCache()
     t0 = time.perf_counter()
     queries[name](spark, sf_dir).write.mode("overwrite") \
@@ -170,8 +182,8 @@ def contract_line(timings: dict[str, float], timings_v2: dict[str, float],
             "per_query_stat": f"median_of_{REPEAT}",
             "ratio_median": round(statistics.median(ratios.values()), 2),
             "ratio_max": round(max(ratios.values()), 2),
-            # v2 block (VERDICT r10 item 3): the post-r1 heavy
-            # operators against their frozen r11 baseline
+            # v2 block: the heavy operators against their own
+            # frozen baseline
             "total_v2_sec": round(sum(timings_v2.values()), 3),
             "ratio_median_v2": round(
                 statistics.median(ratios_v2.values()), 2),
@@ -189,11 +201,11 @@ def contract_line(timings: dict[str, float], timings_v2: dict[str, float],
                                  "bench_id": bench_id}}), False
 
 
-# Codec swap-rule enforcement (VERDICT r6 item 7): the documented rule
-# (docs/MULTIMODAL_CODECS.md) says the pure-Python codecs are an
-# acceptable tax only while DECODABLE MEDIA stays under ~1% of corpus
-# bytes. bench enforces it mechanically: magic-sniff the corpus for
-# real embedded media containers and fail loudly past the threshold.
+# Codec swap-rule enforcement: the documented rule (docs/MULTIMODAL_CODECS.md)
+# says the pure-Python codecs are an acceptable tax only while DECODABLE
+# MEDIA stays under ~1% of corpus bytes. bench enforces it mechanically:
+# magic-sniff the corpus for real embedded media containers and fail
+# loudly past the threshold.
 # (The synthetic wrap the decode QUERIES apply at runtime is harness,
 # not corpus — only bytes that already ARE containers count.)
 CODEC_MEDIA_SHARE_MAX = 0.01
@@ -228,73 +240,16 @@ def main() -> None:
     queries, _ = registry()
 
     spark = get_spark("bench")
-    # JVM/codegen warm-up so the first measured query isn't paying JIT
-    # cost (a NON-headline query, so no measured entry gets extra warming)
-    queries["q4_order_priority"](spark, sf_dir).write.mode(
-        "overwrite").format("noop").save()
+    warm_up(spark, queries, sf_dir)
 
     timings, spread = sweep(spark, queries, HEADLINE, sf_dir)
     timings_v2, spread_v2 = sweep(spark, queries, HEADLINE_V2, sf_dir)
 
-    # operators added after round 1 (non-headline): timed once each
-    # OUTSIDE the headline total so the cross-round contract (value vs
-    # BASELINE.md) stays comparable, while new-op wall clock is still
-    # visible per round (timings land in the detail sidecar, never the
-    # contract line)
-    EXTRA = ("duplicate_spans", "source_mix_weights",
-             "temperature_resample", "quality_ensemble",
-             "bloom_prune_join", "q9_product_type_profit",
-             "q11_important_stock", "doc_lm_score", "pq_encode",
-             "pq_search", "ivfpq_search", "image_phash",
-             "image_phash_neardup", "user_scd2", "similarity_triangles",
-             "data_quality_audit", "mv_incremental_refresh",
-             "cdc_apply", "table_diff", "skyline_pareto", "doc_bfs",
-             "heavy_hitters_cms", "heavy_hitters_cms_direct",
-             "funnel_windowed", "user_growth_accounting",
-             "zorder_layout_stats", "dedup_eval", "ann_recall_eval",
-             "dedup_index_build", "dedup_incremental", "token_rarity",
-             "customer_rfm", "bucketed_join_stats", "user_event_unpivot",
-             # round 6: the rewritten distributed-rank form + the two
-             # new recall audits
-             "customer_value_quartiles", "pq_recall_eval",
-             "graph_recall_eval",
-             # round 7 second session: the composed LSH->CC->medoid
-             # pipeline (decimal medoid sums) gets per-round visibility
-             "semantic_dedup",
-             # round 8: the hot-key-bounded sequences twin (the heavy
-             # round-8 trainers ivf_train and hnsw_* stay out of
-             # bench: their wall is corpus-training time, timed by
-             # tools/scale_probe.py instead of the per-round sweep —
-             # bpe_train GRADUATED into the baselined HEADLINE_V2 set
-             # in r11 and is swept every round now)
-             "user_event_sequences_capped",
-             # round 10: the capped composed dedup pipelines (gate
-             # entries a 100 TB pass runs) get per-round visibility;
-             # r11 PROMOTED dedup_groups_capped, semantic_dedup_capped
-             # and dedup_span_scrub out of this sidecar into the
-             # baselined HEADLINE_V2 set
-             "dedup_keep_best_capped",
-             "dedup_minhash_lsh_capped", "dedup_simhash_capped",
-             "embedding_neardup_lsh_capped",
-             "dedup_fuzzy_verify",
-             # round 10 late: the TPC-H suite completers + the span
-             # alignment/cut operators
-             "q2_min_cost_supplier", "q12_shipping_speed_priority",
-             "q20_dominant_suppliers", "dedup_span_pairs",
-             "contamination_spans",
-             "decontaminate_span_scrub",
-             # round 11: the trained quality classifier pair
-             "quality_train", "quality_classify",
-             # round 12: held-out evaluation + the epoch capstone
-             "quality_eval_holdout", "epoch_assembly")
-    extra = {name: round(time_query(spark, queries, name, sf_dir), 3)
-             for name in EXTRA}
-
-    # Codec throughput ceiling (VERDICT r5 item 6): the pure-Python
-    # BMP/WAV/GIF/AVI codecs are the repo's one documented scale
-    # caveat — record the ceiling as a NUMBER (decoded payload MB/s at
-    # this host's parallelism), not a sentence. Denominator = raw
-    # payload bytes entering the wrap+decode path (docs.text as UTF-8).
+    # Codec throughput ceiling: the pure-Python BMP/WAV/GIF/AVI codecs
+    # are the repo's one documented scale caveat — record the ceiling as
+    # a NUMBER (decoded payload MB/s at this host's parallelism), not a
+    # sentence. Denominator = raw payload bytes entering the wrap+decode
+    # path (docs.text as UTF-8).
     from pyspark.sql import functions as F
 
     from mit_6_5840_mapreduce_spark.sources.tables import load_table
@@ -308,28 +263,9 @@ def main() -> None:
                      "gif_decode_stats", "video_frame_stats",
                      "media_decode_stats")}
 
-    # CC-loop scale probe (VERDICT r5 item 5): cc_labels on synthetic
-    # disjoint 8-node chains — |edges| grows 16x while component
-    # diameter (= rounds) stays constant, the "more data, same graph
-    # depth" shape. Sized small so bench stays lean; the full
-    # 1x/4x/16x probe lives in tools/scale_probe.py.
-    from mit_6_5840_mapreduce_spark.operators.dedup import cc_labels
-    CC_NODES_1X = 50_000
-    cc_probe: dict[str, float] = {}
-    for factor in (1, 16):
-        n = CC_NODES_1X * factor
-        edges = (spark.range(n).where(F.col("id") % 8 != 7)
-                 .select(F.col("id").alias("a"),
-                         (F.col("id") + 1).alias("b")))
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        cc_labels(spark, edges, "a", "b").write.mode("overwrite") \
-            .format("noop").save()
-        cc_probe[f"{factor}x"] = round(time.perf_counter() - t0, 3)
-
     # The contract line must be the LAST stdout line and stay COMPACT
     # (see CONTRACT_LINE_MAX). Diagnostic detail (per-query spreads,
-    # extra-query timings) goes to a sidecar file and a PRECEDING stdout
+    # codec ceiling) goes to a sidecar file and a PRECEDING stdout
     # line, never into the contract line. bench_id ties the contract
     # line to its detail records, so a stale sidecar from a previous run
     # can never be mistaken for this run's
@@ -338,13 +274,10 @@ def main() -> None:
         "bench_id": bench_id,
         "per_query_stat": f"median_of_{REPEAT}",
         "per_query_min_med_max": {**spread, **spread_v2},
-        "extra_query_wall_single_run": extra,
         "ratio_vs_baseline_r1": baseline_ratios(timings, BASELINE_R1),
         "ratio_vs_baseline_v2": baseline_ratios(timings_v2, BASELINE_V2),
         "codec_payload_mb_per_sec": codec_mb_s,
         "codec_corpus_mb": round(corpus_mb, 2),
-        "cc_chain_probe_wall_sec": cc_probe,
-        "cc_chain_probe_nodes_1x": CC_NODES_1X,
         "media_magic_share": round(media_magic_share(spark, sf_dir), 6),
     }
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL",

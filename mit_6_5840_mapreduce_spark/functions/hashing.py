@@ -29,8 +29,3 @@ def md5_int32(col: Column) -> Column:
 def md5_int60(col: Column) -> Column:
     """60-bit int from the first 15 hex chars of md5."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def duckdb_md5_int(expr: str, width: int) -> str:
-    """The DuckDB SQL equivalent of md5_int32/md5_int60 (oracle side)."""
-    return f"CAST(concat('0x', substring(md5({expr}), 1, {width})) AS BIGINT)"

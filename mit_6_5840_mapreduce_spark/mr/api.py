@@ -139,9 +139,3 @@ def collect_output(out: RDD) -> list[str]:
     """The harness-side canonical form: sorted union of all partitions
     (``src/main/test-mr.sh:103-104``: ``sort mr-out* | grep .``)."""
     return sorted(line for line in out.collect() if line)
-
-
-def save_text(out: RDD, path: str) -> None:
-    """Write one ``part-*`` file per reduce partition (the reference's
-    ``mr-out-Y`` layout, ``src/mr/worker.go:173-189``)."""
-    out.saveAsTextFile(path)

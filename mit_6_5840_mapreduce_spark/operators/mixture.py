@@ -42,7 +42,6 @@ from mit_6_5840_mapreduce_spark.functions.numeric import floor4
 from mit_6_5840_mapreduce_spark.functions.text import tokenize
 from mit_6_5840_mapreduce_spark.sources.tables import fan_out, load_table
 
-MIX_ALPHA_NOTE = "alpha = 0.5 (sqrt temperature)"
 RESAMPLE_BUCKETS = 1000         # permille sampling granularity
 ENSEMBLE_CUT = 0.6              # keep threshold on the ensemble score
 LANG_HITS_SAT = 20              # lang-ID hits saturating to confidence 1.0

@@ -82,10 +82,8 @@ QUALITY_LABEL_MIN = 0.7     # doc_quality score gate distilled into labels
 GRAD_SCALE = 1_000_000.0    # per-row gradient quantum (micro-units)
 W_SCALE = 100_000_000.0     # weight grid after each update (1e-8)
 
+
 # feature order everywhere: bias, len, punct, tok
-_W_COLS = ("w_bias", "w_len", "w_punct", "w_tok")
-
-
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, x1, x2, x3, y): the doc_quality capped signals,
     floor4-quantized, plus the distilled binary label. Composes the

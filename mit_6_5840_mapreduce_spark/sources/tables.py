@@ -17,12 +17,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# fixes region=5 and nation=25 rows; suppliers/parts grow with SF).
-BROADCAST_SAFE = ("region", "nation")
-
 
 def normalize_event_ts(df: DataFrame, target: str = "timestamp_ntz"
                        ) -> DataFrame:

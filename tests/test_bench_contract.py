@@ -61,29 +61,60 @@ def test_media_magic_share_is_zero_on_the_real_corpus(spark, sf_dir):
     assert bench.media_magic_share(spark, sf_dir) == 0.0
 
 
-def test_bench_extra_set_is_registered_with_oracles_or_rows_only():
-    """Every extra-timed query must exist in the registry (the bench
-    would crash at runtime otherwise)."""
-    import inspect
-    import re
+def test_bench_main_times_only_the_contract_sweep_and_codec_ceiling(
+        spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """One bench.main() run times exactly the two headline blocks
+    (REPEAT runs each) and the five codec queries, writes only the kept
+    sidecar keys, and ends stdout with the contract line. A recorder
+    stands in for time_query, so only the warm-up and the two corpus
+    scans execute."""
+    from collections import Counter
 
-    import bench
-    import __spark_entry__ as entrymod
-    q = entrymod.queries()
-    # EXTRA is defined inside main(); re-derive it from the source to
-    # keep the contract honest without executing Spark
-    src = inspect.getsource(bench)
-    m = re.search(r"EXTRA = \(([^)]*)\)", src)
-    assert m, "EXTRA tuple not found"
-    names = re.findall(r'"([a-z0-9_]+)"', m.group(1))
-    assert names, "EXTRA parsed empty"
-    unknown = [n for n in names if n not in q]
-    assert not unknown, f"EXTRA names not registered: {unknown}"
-    # a query promoted into a baselined headline generation must LEAVE
-    # the single-run sidecar — double-timing wastes sweep wall and the
-    # sidecar number would shadow the gated one (r11 promotion)
-    dup = set(names) & (set(bench.HEADLINE) | set(bench.HEADLINE_V2))
-    assert not dup, f"EXTRA still times headline queries: {sorted(dup)}"
+    codec = ("image_decode_stats", "audio_decode_stats", "gif_decode_stats",
+             "video_frame_stats", "media_decode_stats")
+    timed: list[str] = []
+
+    def record(_spark, _queries, name, _sf_dir):
+        timed.append(name)
+        return 1.0
+
+    class Session:
+        """The shared session, except that stop() leaves it running."""
+
+        def __getattr__(self, attr):
+            return getattr(spark, attr)
+
+        def stop(self):
+            pass
+
+    detail_path = tmp_path / "bench_detail.json"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(detail_path))
+    monkeypatch.setattr(bench, "time_query", record)
+    monkeypatch.setattr(bench, "get_spark", lambda _name: Session())
+    bench.main()
+
+    expected = Counter({n: bench.REPEAT
+                        for n in bench.HEADLINE + bench.HEADLINE_V2})
+    expected.update(codec)
+    assert Counter(timed) == expected
+    detail = json.loads(detail_path.read_text())
+    assert set(detail) == {
+        "bench_id", "per_query_stat", "per_query_min_med_max",
+        "ratio_vs_baseline_r1", "ratio_vs_baseline_v2",
+        "codec_payload_mb_per_sec", "codec_corpus_mb", "media_magic_share"}
+    assert set(detail["codec_payload_mb_per_sec"]) == set(codec)
+
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(line) < bench.CONTRACT_LINE_MAX
+    rec = json.loads(line)
+    assert set(rec) == {"metric", "value", "unit", "queries", "queries_v2",
+                        "sf", "notes"}
+    assert rec["metric"] == "headline_queries_total_wall"
+    assert list(rec["queries"]) == list(bench.HEADLINE)
+    assert list(rec["queries_v2"]) == list(bench.HEADLINE_V2)
+    assert rec["notes"]["bench_id"] == detail["bench_id"]
+    assert rec["notes"]["detail_file"] == str(detail_path)
 
 
 def test_contract_line_from_a_sweep_carries_the_contract_keys(monkeypatch):

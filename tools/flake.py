@@ -26,16 +26,16 @@ PYTEST_SUBSET = [
     "tests/test_mr_compat.py",
     "tests/test_mad_twins.py",
     "tests/test_registry_window.py",
-    # r11: EXACT float equality across engines/partitionings (the GD
+    # EXACT float equality across engines/partitionings (the GD
     # trainer's order-free contract) and the mid-micro-batch
-    # executor-kill recovery — the two newest places where shuffle
-    # placement or task timing could flake
+    # executor-kill recovery: shuffle placement or task timing could
+    # flake either
     "tests/test_quality.py",
     "tests/test_stream_crash_cluster.py",
-    # r12: the span-window memo's 8-thread concurrent-miss race (the
-    # newest genuinely nondeterministic surface) rides in
-    # test_spans_mixture.py; test_epoch.py pins the composed capstone
-    # whose shuffle/window tiebreaks span five stages
+    # the span-window memo's 8-thread concurrent-miss race (a genuinely
+    # nondeterministic surface) rides in test_spans_mixture.py;
+    # test_epoch.py pins the composed capstone whose shuffle/window
+    # tiebreaks span five stages
     "tests/test_spans_mixture.py",
     "tests/test_epoch.py",
 ]

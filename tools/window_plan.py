@@ -30,14 +30,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # a green cert this many rounds old (or older) by next round's gate
-# belongs in the rotation pool. Ceiling history: 4 through r10; moved
-# to 5 in r11 (VERDICT r10 item 1) — with 193 registered queries and
-# ~44 free window slots per round (50 minus sentinels minus the
-# round's new/changed queries) a full rotation takes ceil(193/44) = 5
-# rounds, so a 4-round ceiling is structurally unmeetable and would
-# accrete a permanent "overdue" backlog; 5 is the smallest ceiling the
-# window can sustain at this registry size. COVERAGE.md "certification
-# window policy" states the same rule for the judge.
+# belongs in the rotation pool. With 195 registered queries and ~44
+# free window slots per round (50 minus sentinels minus the round's
+# new/changed queries) a full rotation takes ceil(195/44) = 5 rounds,
+# so a 4-round ceiling is structurally unmeetable and would accrete a
+# permanent "overdue" backlog; 5 is the smallest ceiling the window can
+# sustain at this registry size. COVERAGE.md "certification window
+# policy" states the same rule for the judge.
 STALE_ROUNDS = 5
 
 
