@@ -13,8 +13,8 @@ uniform ratio inflation = host load; one query moving alone = that
 query regressed. Diagnostic detail goes to a sidecar file
 ($SPARK_GRAFT_BENCH_DETAIL, default /tmp/bench_detail.json): each
 query's [min, median, max], the baseline ratios, the pure-Python codec
-throughput ceiling and the media share the codec swap-rule guard
-checks. Nothing else runs.
+throughput ceiling (CODEC, also median of REPEAT runs) and the media
+share the codec swap-rule guard checks. Nothing else runs.
 
 This line is a single wall-clock reading, not a gain claim. Gains are
 claimed with the paired benchmark, which runs seeded inputs, checks
@@ -111,6 +111,11 @@ BASELINE_V2 = {
     "stream_attribution": 6.02,
     "bpe_train": 3.859,
 }
+
+# The pure-Python decode queries whose payload MB/s is the codec
+# throughput ceiling (docs/MULTIMODAL_CODECS.md).
+CODEC = ("image_decode_stats", "audio_decode_stats", "gif_decode_stats",
+         "video_frame_stats", "media_decode_stats")
 
 # Runs per query; the published number is their median.
 REPEAT = 3
@@ -247,21 +252,18 @@ def main() -> None:
 
     # Codec throughput ceiling: the pure-Python BMP/WAV/GIF/AVI codecs
     # are the repo's one documented scale caveat — record the ceiling as
-    # a NUMBER (decoded payload MB/s at this host's parallelism), not a
-    # sentence. Denominator = raw payload bytes entering the wrap+decode
-    # path (docs.text as UTF-8).
+    # a NUMBER (decoded payload MB/s at this host's parallelism, from
+    # the median of REPEAT runs), not a sentence. Denominator = raw
+    # payload bytes entering the wrap+decode path (docs.text as UTF-8).
     from pyspark.sql import functions as F
 
     from mit_6_5840_mapreduce_spark.sources.tables import load_table
     corpus_mb = (load_table(spark, sf_dir, "documents")
                  .agg(F.sum(F.octet_length("text"))).collect()[0][0]
                  or 0) / 1e6
-    codec_mb_s = {
-        name: round(corpus_mb / time_query(spark, queries, name, sf_dir),
-                    2)
-        for name in ("image_decode_stats", "audio_decode_stats",
-                     "gif_decode_stats", "video_frame_stats",
-                     "media_decode_stats")}
+    codec_sec, _ = sweep(spark, queries, CODEC, sf_dir)
+    codec_mb_s = {name: round(corpus_mb / sec, 2)
+                  for name, sec in codec_sec.items()}
 
     # The contract line must be the LAST stdout line and stay COMPACT
     # (see CONTRACT_LINE_MAX). Diagnostic detail (per-query spreads,

@@ -59,6 +59,9 @@ WINDOW_FIRST: tuple[str, ...] = (
     "mr_wc_assoc", "mr_indexer_rdd",
     # changed: scrub_positions builds its position mask in bigint
     "dedup_span_scrub", "decontaminate_span_scrub", "epoch_assembly",
+    # changed: the quality features fan out the scan before the per-row
+    # work
+    "quality_train", "quality_classify", "quality_eval_holdout",
     # staleness: the r9 certs, then the r10 certs in name order
     "image_phash", "image_phash_neardup", "ivfpq_search",
     "media_features", "mr_indexer", "mv_incremental_refresh",
@@ -70,8 +73,7 @@ WINDOW_FIRST: tuple[str, ...] = (
     "zorder_layout_stats",
     "dedup_fuzzy_verify", "dedup_groups", "dedup_groups_capped",
     "dedup_keep_best", "dedup_keep_best_capped", "dedup_minhash_lsh",
-    "dedup_minhash_lsh_capped", "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_capped", "dedup_simhash",
+    "dedup_minhash_lsh_capped",
 )
 
 

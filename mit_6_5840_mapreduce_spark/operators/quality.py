@@ -87,16 +87,19 @@ W_SCALE = 100_000_000.0     # weight grid after each update (1e-8)
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, x1, x2, x3, y): the doc_quality capped signals,
     floor4-quantized, plus the distilled binary label. Composes the
-    certified ``doc_quality`` query so the per-row float surface this
-    module adds is just three least/floor4 expressions."""
-    from mit_6_5840_mapreduce_spark.operators.textstats import doc_quality
-    from mit_6_5840_mapreduce_spark.sources.tables import fan_out
-    # fan_out: the per-row work (tokenize + fold) dominates the feature
-    # build, and the driver testdata is one unsplittable row group —
-    # spread it before the checkpoint materializes. Partitioning CANNOT
-    # move a bit of the result: gradients sum order-free integers
-    # (module docstring), which test_quality's exact numpy pin proves.
-    dq = fan_out(spark, doc_quality(spark, sf_dir))
+    certified ``doc_quality`` projection so the per-row float surface
+    this module adds is just three least/floor4 expressions."""
+    from mit_6_5840_mapreduce_spark.operators.textstats import (
+        _quality_signals,
+    )
+    from mit_6_5840_mapreduce_spark.sources.tables import fan_out, load_table
+    # fan_out the scan, then compute: the per-row work (tokenize + fold)
+    # dominates the feature build, and the test corpus is one
+    # unsplittable row group. Partitioning CANNOT move a bit of the
+    # result: gradients sum order-free integers (module docstring),
+    # which test_quality's exact numpy pin proves.
+    dq = _quality_signals(
+        fan_out(spark, load_table(spark, sf_dir, "documents")))
     return dq.select(
         "doc_id",
         floor4(F.least(F.col("n_tokens") / F.lit(100.0), F.lit(1.0)))

@@ -64,7 +64,12 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality signals: token counts, mean token length, punctuation ratio,
     and a composite score in [0,1] (heuristic, deterministic)."""
-    docs = load_table(spark, sf_dir, "documents")
+    return _quality_signals(load_table(spark, sf_dir, "documents"))
+
+
+def _quality_signals(docs: DataFrame) -> DataFrame:
+    """doc_quality's projection over any documents frame, so a caller
+    can widen the scan (fan_out) before the per-row work."""
     toks = tokenize(F.col("text"))
     n_tokens = F.size(toks)
     n_chars = F.length("text")

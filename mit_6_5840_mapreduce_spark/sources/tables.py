@@ -48,56 +48,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Spread a scan across all cores before per-row-heavy compute
-    (tokenize/shingle/hash/project). The driver testdata writes each
-    table as ONE parquet row group, which Spark cannot split — so without
-    this, a compute-bound stage runs on a single core no matter how many
-    are free.
+    """Spread a bare table scan across all cores before per-row-heavy
+    compute. The test corpus stores each table as ONE parquet row
+    group, which Spark cannot split, so without this a compute-bound
+    stage runs on a single core however many are free. The repartition
+    fires only when the scan plans fewer splits than the cluster has
+    cores: production inputs arrive as many files and are already wide,
+    and re-shuffling them would buy nothing.
 
-    CONDITIONAL (r7): the repartition only fires when the scan plans
-    fewer splits than the cluster has cores. At production scale inputs
-    arrive as many files/row groups and the scan is already wide — the
-    old unconditional form would re-shuffle the ENTIRE corpus once per
-    consumer (a 100 TB exchange that buys nothing), the exact class
-    docs/SCALE.md forbids. The partition count comes from the driver's
-    split planning (file listing only, no job), so the check is free —
-    but ONLY for scan-shaped inputs (projections/filters over a file
-    relation): with AQE enabled, ``.rdd`` on a plan containing
-    exchanges eagerly EXECUTES the upstream query stages at plan time
-    (ADVICE r7). The precondition is therefore enforced, not assumed:
-    a derived frame raises instead of silently triggering execution."""
-    # Walk the analyzed logical plan via py4j and test node CLASS names
-    # (ADVICE r8): the previous rendered-string prefix match depended on
-    # the tree's toString format, which can drift across Spark versions
-    # (renamed nodes slipping past, new nodes sharing a banned prefix).
-    # Class simple names are the node identities themselves.
-    # Distinct/Intersect/Except survive ANALYSIS (their rewrites to
-    # Aggregate/joins run in the OPTIMIZER), so an analyzed-plan walk
-    # must ban them by their own names too (ADVICE r9: a SQL
-    # `SELECT DISTINCT` input passed the guard and the .rdd probe
-    # silently executed the aggregate-equivalent shuffle)
-    banned = {"Join", "Aggregate", "Repartition", "RepartitionByExpression",
-              "Window", "Sort", "Union", "Deduplicate", "GlobalLimit",
-              "LocalLimit", "Generate", "Distinct", "Intersect", "Except"}
-    seen: set[str] = set()
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        seen.add(node.getClass().getSimpleName())
-        # children() alone misses plans nested in EXPRESSIONS (scalar /
-        # IN subqueries) — which the pre-r9 rendered-string scan did
-        # cover; subqueries() collects exactly those plan-expression
-        # subtrees, closing the silent-execution hole for e.g.
-        # WHERE x > (SELECT avg(x) ...) inputs (r9 review)
-        for seq in (node.children(), node.subqueries()):
-            for i in range(seq.size()):
-                stack.append(seq.apply(i))
-    hit = sorted(banned & seen)
-    if hit:
+    ``df`` must be a bare file scan, as ``load_table`` returns for every
+    table but ``events`` (whose timestamp fix-up is a projection): the
+    split count is read from ``.rdd``, which is free on a scan (file
+    listing only) but executes upstream stages under AQE on a plan with
+    exchanges. Anything else raises."""
+    root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    if root != "LogicalRelation":
         raise ValueError(
-            f"fan_out requires a scan-only input (projections/filters "
-            f"over a file relation); got a plan containing {hit} — "
-            f"probing .rdd here would execute upstream stages under AQE")
+            f"fan_out requires a bare table scan (load_table); got a plan "
+            f"rooted at {root} — probing .rdd here could execute upstream "
+            f"stages under AQE")
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -63,8 +63,8 @@ def test_media_magic_share_is_zero_on_the_real_corpus(spark, sf_dir):
 
 def test_bench_main_times_only_the_contract_sweep_and_codec_ceiling(
         spark, sf_dir, tmp_path, monkeypatch, capsys):
-    """One bench.main() run times exactly the two headline blocks
-    (REPEAT runs each) and the five codec queries, writes only the kept
+    """One bench.main() run times exactly the two headline blocks and
+    the five codec queries (REPEAT runs each), writes only the kept
     sidecar keys, and ends stdout with the contract line. A recorder
     stands in for time_query, so only the warm-up and the two corpus
     scans execute."""
@@ -95,8 +95,7 @@ def test_bench_main_times_only_the_contract_sweep_and_codec_ceiling(
     bench.main()
 
     expected = Counter({n: bench.REPEAT
-                        for n in bench.HEADLINE + bench.HEADLINE_V2})
-    expected.update(codec)
+                        for n in bench.HEADLINE + bench.HEADLINE_V2 + codec})
     assert Counter(timed) == expected
     detail = json.loads(detail_path.read_text())
     assert set(detail) == {

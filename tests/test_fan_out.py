@@ -1,15 +1,21 @@
-"""fan_out contract: widen narrow scans, never re-shuffle wide ones.
+"""fan_out contract: widen narrow scans, never re-shuffle wide ones, and
+take nothing but a bare table scan.
 
-The r7 conditional matters at 100 TB: production scans already plan
-many splits, and an unconditional repartition would add a full-corpus
-exchange to every per-row-heavy consumer. Both branches are pinned —
+The conditional matters at 100 TB: production scans already plan many
+splits, and an unconditional repartition would add a full-corpus
+exchange to every per-row-heavy consumer. Both branches are pinned:
 the gate-SF single-row-group scan still widens to all cores, and an
-already-wide input passes through untouched (same object, no new
-Exchange in the plan).
+already-wide scan passes through untouched (same object, no Exchange
+in the plan).
 """
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from mit_6_5840_mapreduce_spark.plans.explain import plan_shape
 from mit_6_5840_mapreduce_spark.sources.tables import fan_out, load_table
 
 
@@ -21,83 +27,81 @@ def test_fan_out_widens_single_rowgroup_scan(spark, sf_dir):
     assert fan_out(spark, docs).rdd.getNumPartitions() == target
 
 
-def test_fan_out_passes_wide_input_through(spark):
+def test_fan_out_passes_wide_input_through(spark, sf_dir, tmp_path):
+    """A documents table written as one file per core plans one split
+    per file, so the scan is already wide and comes back as is."""
     target = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 1000, 1, target * 4)
-    assert fan_out(spark, wide) is wide
+    table = pq.read_table(f"{sf_dir}/documents.parquet")
+    out_dir = tmp_path / "documents.parquet"
+    out_dir.mkdir()
+    step = -(-table.num_rows // target)
+    for i in range(target):
+        pq.write_table(table.slice(i * step, step),
+                       out_dir / f"part-{i:03d}.parquet")
+    wide = load_table(spark, str(tmp_path), "documents")
+    assert wide.rdd.getNumPartitions() >= target
+    out = fan_out(spark, wide)
+    assert out is wide
+    assert "Exchange" not in plan_shape(out)
 
 
-def test_fan_out_rejects_derived_frames(spark, sf_dir):
-    """ADVICE r7: probing .rdd on a plan with exchanges EXECUTES the
-    upstream stages under AQE, so the scan-only precondition is
-    enforced, not assumed — aggregates, joins, and repartitions raise
-    loudly; projections/filters over the scan stay allowed."""
-    import pytest
+def _sql(spark, docs, query):
+    docs.createOrReplaceTempView("fan_out_docs")
+    return spark.sql(query)
 
+
+# Every frame that is not a bare scan. The DataFrame-API .distinct()
+# analyzes to Deduplicate, while SQL DISTINCT / INTERSECT / EXCEPT keep
+# their own nodes until the optimizer rewrites them; a scalar subquery
+# hides its aggregate inside an expression. The rebalance hint and the
+# grouped pandas map plan exchanges under node names a denylist of
+# shuffling operators easily misses.
+DERIVED = {
+    "projection": lambda spark, docs: docs.select("doc_id", "text"),
+    "filter": lambda spark, docs: docs.where(F.col("doc_id") >= 0),
+    "projection_over_filter": lambda spark, docs: (
+        docs.select("doc_id", "text").where(F.col("doc_id") >= 0)),
+    "node_names_in_literals": lambda spark, docs: (
+        docs.where(F.col("source") != "Union Wire Sort")
+        .select("doc_id", F.col("text").alias("JoinText"))),
+    "aggregate": lambda spark, docs: docs.groupBy("lang").count(),
+    "join": lambda spark, docs: docs.join(docs.select("doc_id"), "doc_id"),
+    "repartition": lambda spark, docs: docs.repartition(4),
+    "distinct": lambda spark, docs: docs.select("lang").distinct(),
+    "scalar_subquery": lambda spark, docs: _sql(
+        spark, docs, "SELECT doc_id, text FROM fan_out_docs "
+        "WHERE doc_id > (SELECT avg(doc_id) FROM fan_out_docs)"),
+    "sql_distinct": lambda spark, docs: _sql(
+        spark, docs, "SELECT DISTINCT lang FROM fan_out_docs"),
+    "sql_intersect": lambda spark, docs: _sql(
+        spark, docs, "SELECT doc_id FROM fan_out_docs WHERE doc_id < 10 "
+        "INTERSECT SELECT doc_id FROM fan_out_docs"),
+    "sql_except": lambda spark, docs: _sql(
+        spark, docs, "SELECT doc_id FROM fan_out_docs "
+        "EXCEPT SELECT doc_id FROM fan_out_docs WHERE doc_id < 10"),
+    "rebalance_hint": lambda spark, docs: docs.hint("rebalance", "lang"),
+    "grouped_pandas_map": lambda spark, docs: (
+        docs.groupBy("lang").applyInPandas(lambda pdf: pdf, docs.schema)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DERIVED))
+def test_fan_out_rejects_non_scan_frames(spark, sf_dir, name):
+    """Reading .rdd on a plan with exchanges executes the upstream
+    stages under AQE, so anything but a bare scan raises, and raises
+    before any job runs."""
     docs = load_table(spark, sf_dir, "documents")
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, docs.groupBy("lang").count())
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, docs.join(docs.select("doc_id"), "doc_id"))
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, docs.repartition(4))
-    # the allowed shape: projection + filter over the raw relation
-    from pyspark.sql import functions as F
-    ok = fan_out(spark, docs.select("doc_id", "text")
-                 .where(F.col("doc_id") >= 0))
-    assert ok.count() > 0
-
-
-def test_fan_out_rejects_subquery_aggregates(spark, sf_dir):
-    """r9 review: banned nodes hiding in plan EXPRESSIONS (scalar/IN
-    subqueries) must trip the guard too — children() alone misses
-    them, and probing .rdd would execute the subquery's upstream
-    stages under AQE exactly like a top-level aggregate."""
-    import pytest
-
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("fan_out_guard_docs")
-    sub = spark.sql(
-        "SELECT doc_id, text FROM fan_out_guard_docs "
-        "WHERE doc_id > (SELECT avg(doc_id) FROM fan_out_guard_docs)")
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, sub)
-
-
-def test_fan_out_guard_matches_nodes_not_substrings(spark, sf_dir):
-    """r8 review: a filter LITERAL or alias containing a banned node
-    name (e.g. 'Union') must not trip the scan-only guard — only real
-    plan nodes do."""
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents")
-    ok = fan_out(spark, docs.where(F.col("source") != "Union Wire Sort")
-                 .select("doc_id", F.col("text").alias("JoinText")))
-    assert ok.count() > 0
-
-
-def test_fan_out_rejects_analysis_surviving_set_ops(spark, sf_dir):
-    """ADVICE r9: Distinct / Intersect / Except keep their own node
-    identity in the ANALYZED plan (their Aggregate/join rewrites run in
-    the optimizer), so the class-name denylist must ban them directly —
-    a SQL `SELECT DISTINCT` input previously passed the guard and the
-    .rdd probe silently executed the aggregate-equivalent shuffle."""
-    import pytest
-
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("fan_out_setop_docs")
-    distinct_sql = spark.sql(
-        "SELECT DISTINCT lang FROM fan_out_setop_docs")
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, distinct_sql)
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, spark.sql(
-            "SELECT doc_id FROM fan_out_setop_docs WHERE doc_id < 10 "
-            "INTERSECT SELECT doc_id FROM fan_out_setop_docs"))
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, spark.sql(
-            "SELECT doc_id FROM fan_out_setop_docs "
-            "EXCEPT SELECT doc_id FROM fan_out_setop_docs WHERE doc_id < 10"))
-    # DataFrame-API .distinct() analyzes to Deduplicate (already banned)
-    with pytest.raises(ValueError, match="scan-only"):
-        fan_out(spark, docs.select("lang").distinct())
+    frame = DERIVED[name](spark, docs)
+    sc = spark.sparkContext
+    group = f"fan_out_rejects_{name}"
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="bare table scan"):
+            fan_out(spark, frame)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

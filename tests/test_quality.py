@@ -74,6 +74,19 @@ def test_train_trace_matches_numpy_exactly(spark, sf_dir):
         assert row.sse_micro == sse
 
 
+def test_features_fan_out_lands_on_the_scan(spark, sf_dir):
+    """The round-robin widening sits directly on the parquet scan, so
+    the tokenize/regexp feature work runs on every core, not above the
+    exchange on the scan's single partition."""
+    from mit_6_5840_mapreduce_spark.plans.explain import executed_plan
+    lines = executed_plan(_features(spark, sf_dir)).splitlines()
+    at = [i for i, line in enumerate(lines)
+          if "Exchange RoundRobinPartitioning" in line]
+    assert len(at) == 1
+    child = lines[at[0] + 1].lstrip(" :+-")
+    assert child.startswith("FileScan parquet"), child
+
+
 def test_training_converges_on_real_corpus(spark, sf_dir):
     rows = quality_train(spark, sf_dir).orderBy("round").collect()
     n = _features(spark, sf_dir).count()
