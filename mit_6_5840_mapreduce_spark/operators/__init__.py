@@ -62,6 +62,10 @@ WINDOW_FIRST: tuple[str, ...] = (
     # changed: the quality features fan out the scan before the per-row
     # work
     "quality_train", "quality_classify", "quality_eval_holdout",
+    # changed: the capped shingle index caps through cap_bucket_population
+    # and recounts surviving set sizes per document
+    "dedup_ngram_jaccard_capped", "shingle_containment_capped",
+    "dedup_groups_capped", "dedup_keep_best_capped",
     # staleness: the r9 certs, then the r10 certs in name order
     "image_phash", "image_phash_neardup", "ivfpq_search",
     "media_features", "mr_indexer", "mv_incremental_refresh",
@@ -71,9 +75,7 @@ WINDOW_FIRST: tuple[str, ...] = (
     "temperature_resample", "user_event_unpivot",
     "user_growth_accounting", "user_scd2", "user_value_outliers",
     "zorder_layout_stats",
-    "dedup_fuzzy_verify", "dedup_groups", "dedup_groups_capped",
-    "dedup_keep_best", "dedup_keep_best_capped", "dedup_minhash_lsh",
-    "dedup_minhash_lsh_capped",
+    "dedup_fuzzy_verify", "dedup_groups", "dedup_keep_best",
 )
 
 

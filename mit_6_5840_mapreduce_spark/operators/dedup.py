@@ -161,6 +161,34 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shingle_index(spark: SparkSession, sf_dir: str,
+                   max_df: int | None) -> DataFrame:
+    """(doc_id, n, hs): the shingle inverted-index rows, each carrying
+    its document's set size ``n``, so the self-join's consumers score
+    pairs with no sizes aggregate or post-aggregate join.
+
+    ``max_df`` caps shingles at that many documents through
+    ``cap_bucket_population`` on ``hs``: (doc_id, hs) is distinct per
+    document, so a shingle's bucket population is its document
+    frequency. Surviving sizes count only the kept shingles (the score
+    is over the pruned universe), so the capped form recounts ``n`` per
+    document after the cap — a window bounded by document length."""
+    # the ARRAY frame is the cache boundary (not the exploded rows):
+    # exploding a staged attribute gets a size(hss) > 0 filter inferred,
+    # and above an InMemoryRelation that filter reads the stored column —
+    # pushed into a raw plan it would re-inline the whole md5 pass per
+    # row (the 2x trap; see _doc_shingles)
+    arr = _doc_shingle_arrays(spark, sf_dir).cache()
+    if max_df is None:
+        return arr.select("doc_id", F.size("hss").alias("n"),
+                          F.explode("hss").alias("hs"))
+    kept = cap_bucket_population(
+        arr.select("doc_id", F.explode("hss").alias("hs")), ["hs"], max_df)
+    return kept.select(
+        "doc_id", F.count("*").over(Window.partitionBy("doc_id")).alias("n"),
+        "hs")
+
+
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
                         max_df: int | None = None) -> DataFrame:
     """Exact word-3-gram Jaccard similarity join (pairs >= MIN_JACCARD).
@@ -179,64 +207,21 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     textbook Jaccard. ``dedup_ngram_jaccard_capped`` is the gate entry
     with the cap on (its DuckDB oracle applies the identical filter).
     """
-    # EXACT form (r14, guide §2.3/§2.4): set sizes are row-local off the
-    # per-doc distinct-hash array (size(hss)) and ride ALONG the
-    # inverted-index rows — 1 extra int per row through the self-join —
-    # so the sizes aggregation and the two post-agg joins disappear.
-    # The pair group keys (doc_a, doc_b) functionally determine
-    # (na, nb), so grouping by all four is value-identical.
-    # CAPPED form: sizes must count SURVIVING shingles (the cap's
-    # contract: Jaccard over the pruned universe), which is not
-    # row-local — it keeps the aggregate + post-agg joins, but the
-    # sizes agg and the keep-filter reuse the cached filtered index.
-    if max_df is None:
-        # the ARRAY frame is the cache boundary (not the exploded
-        # rows): exploding a staged attribute gets a size(hss) > 0
-        # filter inferred, and above an InMemoryRelation that filter
-        # reads the stored column — pushed into a raw plan it would
-        # re-inline the whole md5 pass per row (the 2x trap; see
-        # _doc_shingles)
-        arr = _doc_shingle_arrays(spark, sf_dir).cache()
-        sh = arr.select("doc_id", F.size("hss").alias("n"),
-                        F.explode("hss").alias("hs"))
-        a = sh.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n").alias("na"), "hs")
-        b = sh.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n").alias("nb"), "hs")
-        inter = (
-            a.join(b, "hs")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b", "na", "nb")
-            .agg(F.count("*").alias("n_common"))
-        )
-        return (
-            inter.withColumn(
-                "jaccard",
-                floor4(F.col("n_common")
-                       / (F.col("na") + F.col("nb") - F.col("n_common"))))
-            .where(F.col("jaccard") >= MIN_JACCARD)
-            .select("doc_a", "doc_b", "n_common", "jaccard")
-        )
-    sh = _doc_shingles(spark, sf_dir)
-    keep = (sh.groupBy("hs").agg(F.count("*").alias("df"))
-            .where(F.col("df") <= max_df).select("hs"))
-    sh = sh.join(keep, "hs").cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "hs")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "hs")
+    sh = _shingle_index(spark, sf_dir, max_df)
+    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"),
+                  "hs")
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"),
+                  "hs")
+    # (doc_a, doc_b) functionally determine (na, nb), so grouping by all
+    # four is value-identical and the sizes need no join after the agg
     inter = (
         a.join(b, "hs")
         .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count("*").alias("n_common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n_shingles").alias("nb"))
     return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
+        inter.withColumn(
             "jaccard",
             floor4(F.col("n_common")
                    / (F.col("na") + F.col("nb") - F.col("n_common"))))
@@ -358,8 +343,9 @@ BAND_BUCKET_CAP = 50
 
 def cap_bucket_population(bands: DataFrame, keys: list[str],
                           bucket_cap: int) -> DataFrame:
-    """THE band-bucket population cap — single-sourced for all three
-    band joins (minhash, simhash, embedding-LSH), so the engine filter
+    """THE bucket population cap — single-sourced for every capped
+    self-join (the minhash, simhash and embedding-LSH band joins, the
+    span-occurrence joins and the shingle index), so the engine filter
     cannot drift per family: drop ``keys``-buckets holding more than
     ``bucket_cap`` rows. The population count is one map-side-
     combinable hash-agg on the join key itself; the keep-join shuffles
@@ -825,48 +811,18 @@ def shingle_containment(spark: SparkSession, sf_dir: str,
     100 TB the cap is mandatory (docs/SCALE.md). Default off = the
     oracle-exact textbook form; ``shingle_containment_capped`` is the
     gate entry with the cap engaged."""
-    # Same r14 restructure as dedup_ngram_jaccard: in the EXACT form
-    # |S(A)| is row-local off the per-doc distinct-hash array and rides
-    # the a-side index rows (1 extra int), so the sizes aggregation and
-    # the post-agg join disappear; the CAPPED form's sizes must count
-    # surviving shingles and keep the aggregate + join.
-    containment = floor4(F.col("n_common") / F.col("n"))
-    if max_df is None:
-        # array frame as the cache boundary (the _doc_shingles
-        # pushed-filter rule)
-        arr = _doc_shingle_arrays(spark, sf_dir).cache()
-        sh = arr.select("doc_id", F.size("hss").alias("n"),
-                        F.explode("hss").alias("hs"))
-        a = sh.select(F.col("doc_id").alias("doc_a"), "n", "hs")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "hs")
-        inter = (
-            a.join(b, "hs")
-            .where(F.col("doc_a") != F.col("doc_b"))
-            .groupBy("doc_a", "doc_b", "n")
-            .agg(F.count("*").alias("n_common"))
-        )
-        return (
-            inter.withColumn("containment", containment)
-            .where(F.col("containment") >= CONTAINMENT_MIN)
-            .select("doc_a", "doc_b", "n_common", "containment")
-        )
-    sh = _doc_shingles(spark, sf_dir)
-    keep = (sh.groupBy("hs").agg(F.count("*").alias("df"))
-            .where(F.col("df") <= max_df).select("hs"))
-    sh = sh.join(keep, "hs").cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "hs")
+    sh = _shingle_index(spark, sf_dir, max_df)
+    a = sh.select(F.col("doc_id").alias("doc_a"), "n", "hs")
     b = sh.select(F.col("doc_id").alias("doc_b"), "hs")
     inter = (
         a.join(b, "hs")
         .where(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "n")
         .agg(F.count("*").alias("n_common"))
     )
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), "n"),
-                   "doc_a")
-        .withColumn("containment", containment)
+        inter.withColumn("containment",
+                         floor4(F.col("n_common") / F.col("n")))
         .where(F.col("containment") >= CONTAINMENT_MIN)
         .select("doc_a", "doc_b", "n_common", "containment")
     )

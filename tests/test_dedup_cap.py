@@ -174,7 +174,11 @@ def test_keep_best_reuses_precomputed_labels(spark, tmp_path_factory):
 
 
 def test_cap_keeps_legit_pairs(spark, stop_shingle_dir, tmp_path_factory):
-    """A pair sharing a RARE shingle survives the cap."""
+    """A pair sharing a RARE shingle survives the cap, scored over the
+    SURVIVING sets: docs 20/21 keep 5 of their 6 shingles each (the
+    stop shingle, df 22, is dropped) and share 4 of them, so Jaccard is
+    4/6 and containment 4/5 (full set sizes would give 0.5 and
+    0.6666)."""
     texts = [f"stop stop stop {_tok(2 * i)} {_tok(2 * i + 1)}"
              for i in range(20)]
     # docs 20/21 share a rare 5-token run => 3 shared rare shingles
@@ -189,9 +193,10 @@ def test_cap_keeps_legit_pairs(spark, stop_shingle_dir, tmp_path_factory):
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     })
     pq.write_table(table, os.path.join(str(d), "documents.parquet"))
-    rows = (dedup_ngram_jaccard(spark, str(d), max_df=10)
-            .select("doc_a", "doc_b").collect())
-    assert {(r.doc_a, r.doc_b) for r in rows} == {(20, 21)}
+    rows = dedup_ngram_jaccard(spark, str(d), max_df=10).collect()
+    assert {tuple(r) for r in rows} == {(20, 21, 4, 0.6666)}
+    rows = shingle_containment(spark, str(d), max_df=10).collect()
+    assert {tuple(r) for r in rows} == {(20, 21, 4, 0.8), (21, 20, 4, 0.8)}
 
 
 def _pointer_jump_rounds(d: int) -> int:

@@ -20,8 +20,10 @@ SENTINELS = {"mr_wc", "mr_wc_rdd", "dedup_exact", "stream_hourly_counts"}
 
 # changed since their last certification: the streams (one availableNow
 # runner), the RDD MapReduce jobs (one shuffle instead of two), the
-# scrub_positions consumers (bigint position mask) and the quality
-# trainer family (fan_out lands on the scan, below the feature work)
+# scrub_positions consumers (bigint position mask), the quality
+# trainer family (fan_out lands on the scan, below the feature work) and
+# the capped shingle-index consumers (one cap_bucket_population filter,
+# per-document surviving sizes)
 CHANGED = {
     "stream_sliding_counts", "stream_dedup_events", "stream_user_totals",
     "stream_enriched_events", "stream_foreachbatch_roundtrip",
@@ -30,6 +32,8 @@ CHANGED = {
     "mr_wc_assoc", "mr_indexer_rdd",
     "dedup_span_scrub", "decontaminate_span_scrub", "epoch_assembly",
     "quality_train", "quality_classify", "quality_eval_holdout",
+    "dedup_ngram_jaccard_capped", "shingle_containment_capped",
+    "dedup_groups_capped", "dedup_keep_best_capped",
 }
 
 # staleness rotation: the r9 certs not already changed above ...
@@ -45,11 +49,7 @@ STALE_R9 = {
 }
 
 # ... then the first r10 certs in name order
-STALE_R10_HEAD = {
-    "dedup_fuzzy_verify", "dedup_groups", "dedup_groups_capped",
-    "dedup_keep_best", "dedup_keep_best_capped", "dedup_minhash_lsh",
-    "dedup_minhash_lsh_capped",
-}
+STALE_R10_HEAD = {"dedup_fuzzy_verify", "dedup_groups", "dedup_keep_best"}
 
 MUST_BE_IN_WINDOW = SENTINELS | CHANGED | STALE_R9 | STALE_R10_HEAD
 
@@ -62,7 +62,7 @@ def test_first_window_contains_the_must_list():
 
 
 def test_window_is_exactly_the_must_list():
-    # 4 + 18 + 21 + 7 = 50: no free slots
+    # 4 + 22 + 21 + 3 = 50: no free slots
     assert len(MUST_BE_IN_WINDOW) == WINDOW_SIZE
 
 
